@@ -9,8 +9,12 @@ Spark-native re-expression of [MSBFS15] Alg. 2/3 (SURVEY.md §2.9 K1/K2):
   paper's aggregated-neighbor-processing (ANP) optimization.
 * masking/update (seen' = seen|agg, visit' = agg & ~seen) is pure int64
   column arithmetic — WholeStageCodegen, no Python in the hot path.
-* per-level lane accounting (closeness r/s, frontier emptiness) is one
-  vectorized Arrow kernel (`mapInArrow`) emitting ≤513 rows per batch.
+* per-level lane accounting (closeness r/s, frontier emptiness) is a
+  byte-slot histogram: explode + groupBy(key).sum, ≤16 388 groups, that
+  the driver unpacks into lane counts with numpy.  The per-level distance
+  deltas and the K3 closed bitmap are Catalyst expressions too, so no
+  level job starts a Python worker (each Python task costs a fixed
+  ~0.2-0.3 s of worker CPU, more than a small level's bitwise work).
 * direction/strategy switch (K3 analog): the frontier side is broadcast
   when small (first/last levels), shuffled-hash otherwise; the edge table
   never re-shuffles (partitioned by src at build).
@@ -29,13 +33,12 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from linkgraph.graph import LinkGraph, broadcast_threshold, parse_bytes
-from linkgraph.operators.bitset import limb_names, limbs_to_bits, pack_sources
+from linkgraph.operators.bitset import limb_names, pack_sources
 from linkgraph.schemas import NLIMBS, bfs_state_schema
 
 _S = limb_names("s")
@@ -74,129 +77,93 @@ class MsBfsResult:
         return self._distances_pdf
 
 
-def _lane_count_kernel(
-    nlimbs: int, nsrc: int, with_deg: bool = False, full_masks=None
-):
-    """mapInArrow kernel over (vid[, deg], v0..[, s0..]) -> per-lane new-bit
-    counts.  Emits (lane, cnt) for lanes 0..nsrc-1 plus sentinel rows:
-    lane=-1: number of rows with any new bit (frontier row count);
-    lane=-2 (when with_deg): Σ deg(v)·popcount(v) over frontier rows — the
-    exact (edge, lane) expansion count of the NEXT level (TEPS accounting);
-    lane=-3 (when full_masks): number of CLOSED rows (seen full across all
-    lanes) — drives the K3 pull-filter gate, measured for free in the same
-    state scan instead of an extra job;
-    lane=-4: total state rows — lets the bottom-up gate know when the state
-    covers all |V| vertices (open set = not-closed state rows exactly).
+# bit k of byte b, little-endian: (256, 8) — unpacks the byte-slot histogram
+_BYTE_BITS = np.unpackbits(
+    np.arange(256, dtype=np.uint8)[:, None], axis=1, bitorder="little"
+).astype(np.int64)
+
+
+def _lane_accounting(
+    state: DataFrame, nsrc: int, with_deg: bool = False, full_masks=None
+) -> DataFrame:
+    """Per-level lane accounting as a byte-slot histogram (key, cnt) — pure
+    Catalyst, so the fused level job starts no Python worker.
+
+    Byte j of visit limb i is slot 8i+j and covers lanes 64i+8j..+7.  Each
+    frontier row emits (slot*256 + byte, 1) for every slot holding a lane
+    < nsrc; `_unpack_lane_counts` turns the ≤16 384 byte counts into lane
+    counts.  Sentinel keys, each a sum over state rows:
+    -1: frontier rows (any visit bit set);
+    -2 (when with_deg): Σ deg(v)·popcount(v) over frontier rows — the exact
+    (edge, lane) expansion count of the NEXT level (TEPS accounting);
+    -3 (when full_masks): CLOSED rows (seen full across all lanes) — drives
+    the K3 pull-filter gate, measured for free in the same state scan;
+    -4: state rows — lets the bottom-up gate know when the state covers all
+    |V| vertices (open set = not-closed state rows exactly).
+    Idle rows emit only the -3/-4 entries, and partial aggregation collapses
+    the explode map-side to ≤16 388 groups per task.
     """
 
-    def fn(batches):
-        total = np.zeros(nsrc, dtype=np.int64)
-        rows_any = 0
-        traversals = 0
-        closed_rows = 0
-        state_rows = 0
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            state_rows += batch.num_rows
-            limbs = np.column_stack(
-                [
-                    batch.column(f"v{i}").to_numpy(zero_copy_only=False)
-                    for i in range(nlimbs)
-                ]
-            ).view(np.uint64)
-            any_mask = (limbs != 0).any(axis=1)
-            rows_any += int(any_mask.sum())
-            if full_masks is not None:
-                seen = np.column_stack(
-                    [
-                        batch.column(f"s{i}").to_numpy(zero_copy_only=False)
-                        for i in range(nlimbs)
-                    ]
-                ).view(np.uint64)
-                fm = np.asarray(full_masks, dtype=np.int64).view(np.uint64)
-                closed_rows += int((seen == fm).all(axis=1).sum())
-            if any_mask.any():
-                bits = limbs_to_bits(limbs[any_mask])
-                total += bits.sum(axis=0)[:nsrc].astype(np.int64)
-                if with_deg:
-                    deg = (
-                        batch.column("deg")
-                        .to_numpy(zero_copy_only=False)[any_mask]
-                        .astype(np.int64)
-                    )
-                    traversals += int(
-                        (deg * bits.sum(axis=1).astype(np.int64)).sum()
-                    )
-        lanes = [np.arange(nsrc, dtype=np.int32), [-1], [-4]]
-        cnts = [total, [rows_any], [state_rows]]
-        if with_deg:
-            lanes.append([-2])
-            cnts.append([traversals])
-        if full_masks is not None:
-            lanes.append([-3])
-            cnts.append([closed_rows])
-        yield pa.RecordBatch.from_pydict(
-            {
-                "lane": pa.array(np.concatenate(lanes).astype(np.int32), pa.int32()),
-                "cnt": pa.array(np.concatenate(cnts).astype(np.int64), pa.int64()),
-            }
-        )
+    def entry(key, cnt) -> str:
+        return f"named_struct('key', cast({key} as int), 'cnt', cast({cnt} as bigint))"
 
-    return fn
-
-
-def _explode_kernel(nlimbs: int, nsrc: int):
-    """mapInArrow: (vid, v0..) -> (vid, lane) for every set visit bit."""
-
-    def fn(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            vid = batch.column("vid").to_numpy(zero_copy_only=False)
-            limbs = np.column_stack(
-                [
-                    batch.column(f"v{i}").to_numpy(zero_copy_only=False)
-                    for i in range(nlimbs)
-                ]
-            ).view(np.uint64)
-            bits = limbs_to_bits(limbs)[:, :nsrc]
-            r, lane = np.nonzero(bits)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "vid": pa.array(vid[r], pa.int64()),
-                    "lane": pa.array(lane.astype(np.int32), pa.int32()),
-                }
+    idle = [entry(-4, 1)]
+    if full_masks is not None:
+        closed = " and ".join(f"{c} = {m}L" for c, m in zip(_S, full_masks))
+        idle.append(entry(-3, f"if({closed}, 1, 0)"))
+    active = [entry(-1, 1), *idle]
+    if with_deg:
+        pop = " + ".join(f"bit_count({c})" for c in _V)
+        active.append(entry(-2, f"deg * ({pop})"))
+    for slot in range((nsrc + 7) // 8):
+        byte = f"shiftright({_V[slot // 8]}, {8 * (slot % 8)}) & 255"
+        active.append(entry(f"{slot * 256} + ({byte})", 1))
+    frontier = " or ".join(f"{c} != 0" for c in _V)
+    # one SQL string: building ~70 structs from Column functions costs ~1 s
+    # of py4j round trips per level on the driver, parsing this ~10 ms
+    return (
+        state.select(
+            F.expr(
+                f"inline(if({frontier}, array({', '.join(active)}), "
+                f"array({', '.join(idle)})))"
             )
-
-    return fn
-
-
-def _bitmap_build_kernel(n_limbs_v: int):
-    """mapInArrow over (vid) -> sparse (idx, limb) partial bitmaps.
-
-    Each task ORs its vids into a task-local |V|-bit array (12 MB per 10^8
-    vertices) and emits only the nonzero limbs; a bit_or aggregate on idx
-    merges the partials — at most (max_vid/64) narrow rows ever move."""
-
-    def fn(batches):
-        limbs = np.zeros(n_limbs_v, dtype=np.uint64)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            v = batch.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
-            np.bitwise_or.at(
-                limbs, v >> 6, np.uint64(1) << (v & 63).astype(np.uint64)
-            )
-        idx = np.flatnonzero(limbs)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "idx": pa.array(idx.astype(np.int64), pa.int64()),
-                "limb": pa.array(limbs[idx].view(np.int64), pa.int64()),
-            }
         )
+        .groupBy("key")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
 
-    return fn
+
+def _unpack_lane_counts(rows, nsrc: int) -> tuple[np.ndarray, dict[int, int]]:
+    """(key, cnt) histogram rows -> (per-lane new-bit counts, sentinels)."""
+    hist = np.zeros(NLIMBS * 8 * 256, dtype=np.int64)
+    sentinels = {}
+    for key, cnt in rows:
+        if key < 0:
+            sentinels[key] = int(cnt)
+        else:
+            hist[key] = cnt
+    lanes = hist.reshape(NLIMBS * 8, 256) @ _BYTE_BITS  # (slot, bit) counts
+    return lanes.reshape(-1)[:nsrc], sentinels
+
+
+def _visit_lanes(state: DataFrame, nsrc: int) -> DataFrame:
+    """(vid, v0..) -> (vid, lane) for every set visit bit of lanes < nsrc:
+    explode the nonzero limbs, then their 64 bit positions — JVM-side."""
+    limbs = _V[: (nsrc + 63) // 64]
+    lane = F.col("_limb_i") * 64 + F.col("_bit")
+    return (
+        state.select("vid", F.posexplode(F.array(*limbs)).alias("_limb_i", "_limb"))
+        .where(F.col("_limb") != 0)
+        .select(
+            "vid", "_limb_i", "_limb",
+            F.explode(F.sequence(F.lit(0), F.lit(63))).alias("_bit"),
+        )
+        .where(
+            (F.call_function("shiftright", "_limb", "_bit").bitwiseAND(1) == 1)
+            & (lane < nsrc)
+        )
+        .select("vid", lane.cast("int").alias("lane"))
+    )
 
 
 def _closed_limb_table(state: DataFrame, closed_pred: str, max_vid: int) -> DataFrame:
@@ -209,22 +176,22 @@ def _closed_limb_table(state: DataFrame, closed_pred: str, max_vid: int) -> Data
     bytes per closed vertex), so the mid-range regime — open AND closed
     sets both beyond the row-broadcast threshold — still broadcasts easily
     (10^9 vertices = 15.6M rows / 125 MB of limbs, within
-    spark.linkgraph.msbfs.bitmapMaxBytes).  Built distributedly: per-task
-    partial bitmaps (mapInArrow, numpy bitwise_or.at) -> bit_or merge on
-    limb index; only NONZERO limbs ever exist, so sparsity is free.  The
-    consumer joins it broadcast and tests the bit with pure codegen'd int64
-    arithmetic — no Python, no shuffle (a first-cut mapInArrow message
-    filter was measured 14% SLOWER than the anti-join fallback at bench
-    scale purely from Arrow-serializing every 9-column message row;
-    BENCH/bitmap_bench.py)."""
-    n_limbs_v = (max_vid >> 6) + 1
+    spark.linkgraph.msbfs.bitmapMaxBytes).  Built distributedly as one
+    bit_or aggregate on the limb index vid>>6: partial aggregation merges
+    each task's bits map-side, at most (max_vid/64)+1 narrow rows ever move,
+    and only NONZERO limbs ever exist, so sparsity is free.  max_vid bounds
+    the table; the caller's budget gate checks it.  The consumer joins it
+    broadcast and tests the bit with pure codegen'd int64 arithmetic — no
+    Python, no shuffle (a first-cut mapInArrow message filter was measured
+    14% SLOWER than the anti-join fallback at bench scale purely from
+    Arrow-serializing every 9-column message row; BENCH/bitmap_bench.py)."""
+    bit = F.call_function(
+        "shiftleft", F.lit(1).cast("long"), F.col("vid").bitwiseAND(63).cast("int")
+    )
     return (
         state.where(closed_pred)
-        .select("vid")
-        .mapInArrow(_bitmap_build_kernel(n_limbs_v), "idx long, limb long")
-        .groupBy("idx")
-        .agg(F.bit_or("limb").alias("_bm_limb"))
-        .withColumnRenamed("idx", "_bm_idx")
+        .groupBy(F.shiftright("vid", 6).alias("_bm_idx"))
+        .agg(F.bit_or(bit).alias("_bm_limb"))
     )
 
 
@@ -318,12 +285,13 @@ def msbfs(
         )
 
     skip_account = False  # snapshot level was already accounted pre-snapshot
+    resumed_level = None  # its snapshot is the state being read: never rewrite it
     if resume and checkpoint_mgr is not None:
         snap = checkpoint_mgr.latest()
         if snap is not None:
             state = checkpoint_mgr.read_state(snap).persist(StorageLevel.MEMORY_AND_DISK)
             m = snap["metrics"]
-            level = int(m["level"])
+            level = resumed_level = int(m["level"])
             skip_account = True
             r = np.asarray(m["r"], dtype=np.int64)
             s = np.asarray(m["s"], dtype=np.int64)
@@ -347,11 +315,6 @@ def msbfs(
         bits = min(64, max(0, nsrc - 64 * i))
         full_masks.append(-1 if bits == 64 else (1 << bits) - 1)
 
-    count_kernel = _lane_count_kernel(
-        nlimbs, nsrc, with_deg=track_teps, full_masks=full_masks if bottom_up else None
-    )
-    count_schema = "lane int, cnt long"
-    explode_kernel = _explode_kernel(nlimbs, nsrc)
     frontier_rows = None  # unknown until first accounting pass
     closed_rows = 0  # K3 gate: fully-seen vertex count, measured per level
     state_rows = 0  # K3 gate: state row count (== |V| once fully covered)
@@ -375,7 +338,7 @@ def msbfs(
                 # ACTION that materializes the (lazily localCheckpointed) state
                 # of the previous level's update — one fused Spark job per
                 # level covers expand + OR-agg + mask/update + accounting.
-                scols = list(_S) if bottom_up else []
+                counts_in = state
                 if track_teps:
                     deg = graph.degrees()
                     thresh = broadcast_threshold(spark)
@@ -384,29 +347,23 @@ def msbfs(
                     # bench-only instrumentation; byte-gated so instrumented
                     # runs at 10^9 vertices degrade to a shuffled join
                     # instead of an unconditional |V|-row broadcast
-                    acct_src = state.join(deg, "vid", "left").withColumn(
+                    counts_in = state.join(deg, "vid", "left").withColumn(
                         "deg", F.coalesce(F.col("deg"), F.lit(0))
                     )
-                    counts_in = acct_src.select("vid", "deg", *_V, *scols)
-                else:
-                    counts_in = state.select("vid", *_V, *scols)
-                counts = (
-                    counts_in.mapInArrow(count_kernel, count_schema)
-                    .groupBy("lane")
-                    .agg(F.sum("cnt").alias("cnt"))
-                    .collect()
+                lane_arr, sentinels = _unpack_lane_counts(
+                    _lane_accounting(
+                        counts_in, nsrc, with_deg=track_teps,
+                        full_masks=full_masks if bottom_up else None,
+                    ).collect(),
+                    nsrc,
                 )
-                by_lane = {row["lane"]: row["cnt"] for row in counts}
-                frontier_rows = int(by_lane.pop(-1, 0))
-                traversed += int(by_lane.pop(-2, 0))
-                closed_rows = int(by_lane.pop(-3, 0))
-                state_rows = int(by_lane.pop(-4, 0))
-                new_total = int(sum(by_lane.values()))
+                frontier_rows = sentinels.get(-1, 0)
+                traversed += sentinels.get(-2, 0)
+                closed_rows = sentinels.get(-3, 0)
+                state_rows = sentinels.get(-4, 0)
+                new_total = int(lane_arr.sum())
                 per_level_new.append(new_total)
                 if new_total:
-                    lane_arr = np.zeros(nsrc, dtype=np.int64)
-                    for lane, cnt in by_lane.items():
-                        lane_arr[lane] = cnt
                     r += lane_arr
                     s += lane_arr * level
                     if level:
@@ -416,8 +373,7 @@ def msbfs(
                     # distributed per-level delta append — never through the
                     # driver (n×512 distances at scale is terabytes)
                     (
-                        state.select("vid", *_V)
-                        .mapInArrow(explode_kernel, "vid long, lane int")
+                        _visit_lanes(state, nsrc)
                         .withColumn("dist", F.lit(level).cast("int"))
                         .write.mode("overwrite")
                         .parquet(os.path.join(distances_path, f"level={level}"))
@@ -432,7 +388,12 @@ def msbfs(
             if new_total == 0 or (max_levels is not None and level >= max_levels):
                 break
 
-            if checkpoint_mgr is not None and level and level % snapshot_every == 0:
+            if (
+                checkpoint_mgr is not None
+                and level
+                and level % snapshot_every == 0
+                and level != resumed_level
+            ):
                 # durable snapshot: resumable mid-traversal with lineage+metrics
                 metrics = {
                     "level": level,
@@ -659,7 +620,7 @@ def harmonic(graph: LinkGraph, res: MsBfsResult, n: int | None = None) -> DataFr
     on disconnected graphs (Boldi & Vigna, "Axioms for Centrality").
 
     Free given an MS-BFS run: the per-level lane counts the accounting
-    kernel already collects fold into Σ new_d/d on the driver (nsrc
+    query already collects fold into Σ new_d/d on the driver (nsrc
     doubles — no extra distributed pass), exactly like closeness's r/s.
     """
     n = n or graph.num_vertices()

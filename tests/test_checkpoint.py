@@ -20,9 +20,25 @@ def grid(spark):
     return LinkGraph.from_undirected(edges_df(spark, grid_edges()), num_partitions=8)
 
 
-def test_msbfs_resume_equals_uninterrupted(spark, grid, tmp_path):
+@pytest.fixture(scope="module")
+def grid_full(grid):
+    """Uninterrupted 2-source run on the grid, shared by the resume tests."""
+    return msbfs(grid, [0, 63], emit_distances=True)
+
+
+def _assert_same_traversal(resumed, full):
+    assert np.array_equal(resumed.r, full.r)
+    assert np.array_equal(resumed.s, full.s)
+    assert np.array_equal(resumed.h, full.h)  # harmonic sums survive resume
+    assert np.array_equal(resumed.ecc, full.ecc)  # eccentricities too
+    da = full.distances.sort_values(["src", "vid"]).reset_index(drop=True)
+    db = resumed.distances.sort_values(["src", "vid"]).reset_index(drop=True)
+    assert da.astype("int64").equals(db.astype("int64"))
+
+
+def test_msbfs_resume_equals_uninterrupted(spark, grid, grid_full, tmp_path):
     srcs = [0, 63]
-    full = msbfs(grid, srcs, emit_distances=True)
+    full = grid_full
 
     root = str(tmp_path / "chk")
     mgr = CheckpointManager(spark, root)
@@ -37,13 +53,25 @@ def test_msbfs_resume_equals_uninterrupted(spark, grid, tmp_path):
     resumed = msbfs(
         grid, srcs, emit_distances=True, checkpoint_mgr=mgr, snapshot_every=100, resume=True
     )
-    assert np.array_equal(resumed.r, full.r)
-    assert np.array_equal(resumed.s, full.s)
-    assert np.array_equal(resumed.h, full.h)  # harmonic sums survive resume
-    assert np.array_equal(resumed.ecc, full.ecc)  # eccentricities too
-    da = full.distances.sort_values(["src", "vid"]).reset_index(drop=True)
-    db = resumed.distances.sort_values(["src", "vid"]).reset_index(drop=True)
-    assert da.astype("int64").equals(db.astype("int64"))
+    _assert_same_traversal(resumed, full)
+
+
+def test_msbfs_resume_keeps_snapshotting(spark, grid, grid_full, tmp_path):
+    """Resuming with a snapshot_every that divides the resumed level must
+    not rewrite the snapshot it is reading, and must keep snapshotting
+    the levels after it."""
+    srcs = [0, 63]
+    mgr = CheckpointManager(spark, str(tmp_path / "chk"))
+    msbfs(
+        grid, srcs, emit_distances=True, checkpoint_mgr=mgr, snapshot_every=4, max_levels=5
+    )
+    assert mgr.latest()["metrics"]["level"] == 4
+
+    resumed = msbfs(
+        grid, srcs, emit_distances=True, checkpoint_mgr=mgr, snapshot_every=4, resume=True
+    )
+    _assert_same_traversal(resumed, grid_full)
+    assert [m["metrics"]["level"] for m in mgr.snapshots()] == [4, 8, 12]
 
 
 def test_uncommitted_snapshot_invisible(spark, tmp_path):

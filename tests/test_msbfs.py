@@ -237,6 +237,84 @@ def test_closed_limb_table_bit_math(spark):
     assert kept == [0, 5, 100, 199]
 
 
+def _random_state(spark, nsrc, rows=200, seed=7):
+    """Random (vid, deg, s0..s7, v0..v7) rows: limbs span the full int64
+    range (sign bit included), every 5th row has no visit bit, every 7th
+    is closed under full_masks(nsrc).  Returns (df, deg, s, v, full_masks)."""
+    from linkgraph.schemas import NLIMBS
+
+    rng = np.random.default_rng(seed)
+    info = np.iinfo(np.int64)
+    v = rng.integers(info.min, info.max, size=(rows, NLIMBS), dtype=np.int64)
+    s = rng.integers(info.min, info.max, size=(rows, NLIMBS), dtype=np.int64)
+    v[::5] = 0
+    full_masks = [
+        -1 if nsrc - 64 * i >= 64 else (1 << max(0, nsrc - 64 * i)) - 1
+        for i in range(NLIMBS)
+    ]
+    s[::7] = full_masks
+    deg = rng.integers(0, 50, size=rows, dtype=np.int64)
+    data = [
+        (i, int(deg[i]), *map(int, s[i]), *map(int, v[i])) for i in range(rows)
+    ]
+    cols = ["vid long", "deg long"] + [f"s{i} long" for i in range(NLIMBS)]
+    cols += [f"v{i} long" for i in range(NLIMBS)]
+    return spark.createDataFrame(data, ", ".join(cols)), deg, s, v, full_masks
+
+
+def _reference_accounting(deg, s, v, nsrc, full_masks):
+    """numpy replica of the per-level accounting contract: per-lane new-bit
+    counts for lanes < nsrc plus the -1..-4 sentinels."""
+    from linkgraph.operators.bitset import limbs_to_bits
+
+    vu = v.view(np.uint64)
+    frontier = (vu != 0).any(axis=1)
+    bits = limbs_to_bits(vu).astype(np.int64)
+    fm = np.asarray(full_masks, dtype=np.int64).view(np.uint64)
+    sentinels = {
+        -1: int(frontier.sum()),
+        -2: int((deg * bits.sum(axis=1))[frontier].sum()),
+        -3: int((s.view(np.uint64) == fm).all(axis=1).sum()),
+        -4: len(v),
+    }
+    return bits[frontier].sum(axis=0)[:nsrc], sentinels, bits
+
+
+@pytest.mark.parametrize("nsrc", [70, 512])
+def test_lane_accounting_matches_numpy_reference(spark, nsrc):
+    """The Catalyst byte-slot histogram unpacks to exactly the reference
+    lane counts and sentinels — including sign-bit limbs, a partial last
+    limb (nsrc=70), all-zero visit rows, closed rows and deg weights."""
+    from linkgraph.algos.msbfs import _lane_accounting, _unpack_lane_counts
+
+    df, deg, s, v, full_masks = _random_state(spark, nsrc)
+    exp_lanes, exp_sent, _ = _reference_accounting(deg, s, v, nsrc, full_masks)
+    lanes, sent = _unpack_lane_counts(
+        _lane_accounting(df, nsrc, with_deg=True, full_masks=full_masks).collect(),
+        nsrc,
+    )
+    assert np.array_equal(lanes, exp_lanes)
+    assert sent == exp_sent
+
+    lanes, sent = _unpack_lane_counts(_lane_accounting(df, nsrc).collect(), nsrc)
+    assert np.array_equal(lanes, exp_lanes)
+    assert sent == {-1: exp_sent[-1], -4: exp_sent[-4]}
+
+
+def test_visit_lanes_matches_numpy_reference(spark):
+    """The JVM distances explode emits exactly the reference (vid, lane)
+    set of visit bits below nsrc."""
+    from linkgraph.algos.msbfs import _visit_lanes
+
+    nsrc = 70
+    df, deg, s, v, full_masks = _random_state(spark, nsrc)
+    _, _, bits = _reference_accounting(deg, s, v, nsrc, full_masks)
+    rows, lanes = np.nonzero(bits[:, :nsrc])
+    exp = set(zip(rows.tolist(), lanes.tolist()))
+    got = [(r["vid"], r["lane"]) for r in _visit_lanes(df, nsrc).collect()]
+    assert len(got) == len(exp) and set(got) == exp
+
+
 def test_bitmap_budget_falls_back_to_anti_join(spark, er):
     """A max_vid beyond spark.linkgraph.msbfs.bitmapMaxBytes must refuse the
     bitmap (executor memory guard) and take the msg_anti fallback."""

@@ -388,6 +388,31 @@ def test_shared_ngram_span_enumeration_is_codegen(spark):
     assert "Generate (" in plan  # JVM explode of the generated span array
 
 
+def test_msbfs_level_queries_plan_no_python(spark):
+    """The per-level MS-BFS side queries — lane accounting, the distances
+    delta explode and the K3 closed bitmap — stay JVM-side: a Python node
+    in any of them starts a Python worker on every level."""
+    from linkgraph.algos.msbfs import (
+        _closed_limb_table,
+        _lane_accounting,
+        _visit_lanes,
+    )
+    from linkgraph.schemas import NLIMBS
+
+    cols = ["vid long", "deg long"] + [f"s{i} long" for i in range(NLIMBS)]
+    cols += [f"v{i} long" for i in range(NLIMBS)]
+    state = spark.createDataFrame([(i, 1) + (i,) * 2 * NLIMBS for i in range(8)],
+                                  ", ".join(cols))
+    for df in (
+        _lane_accounting(state, 512, with_deg=True, full_masks=[-1] * NLIMBS),
+        _visit_lanes(state, 512).withColumn("dist", F.lit(1)),
+        _closed_limb_table(state, "s0 = -1", max_vid=7),
+    ):
+        plan = _plan(df)
+        for node in ("MapInArrow", "PythonMapInArrow", "ArrowEvalPython"):
+            assert node not in plan, plan
+
+
 def test_epoch_shuffle_no_global_sort(spark):
     """The permutation ranks inside hash buckets: the plan must carry NO
     single-partition exchange (the naive Window.orderBy(h) global sort)."""
