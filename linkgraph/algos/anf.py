@@ -39,7 +39,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iterate
 
 _FM_PHI = 0.77351  # Flajolet–Martin bias correction
 
@@ -106,56 +107,48 @@ def anf_full(
     n = graph.num_vertices()
     mcols = [f"m{j}" for j in range(k)]
 
-    state = graph.vertices().select(
-        "vid", *[_fm_init_limb(j, hash_mode).alias(f"m{j}") for j in range(k)]
-    ).localCheckpoint(eager=True)
+    curve: list[tuple[int, float]] = []
 
-    def hist_of(df: DataFrame, changed_col=None) -> tuple[list, int]:
+    def probe(df: DataFrame) -> int:
+        """Appends N(h) for this round's state; returns its changed count
+        (None for the seed, which has no _chg column)."""
         agg = [F.count("*").alias("c")]
-        if changed_col is not None:
-            agg.append(F.sum(F.col(changed_col).cast("long")).alias("ch"))
+        if "_chg" in df.columns:
+            agg.append(F.sum(F.col("_chg").cast("long")).alias("ch"))
         rows = df.groupBy(_s_expr(k).alias("S")).agg(*agg).collect()
         hist = [(int(r["S"]), int(r["c"])) for r in rows]
-        changed = sum(int(r["ch"]) for r in rows) if changed_col is not None else 0
-        return hist, changed
+        curve.append((len(curve), _nf_from_hist(hist, k)))
+        return sum(int(r["ch"]) for r in rows) if "_chg" in df.columns else None
 
-    curve: list[tuple[int, float]] = []
-    hist, _ = hist_of(state)
-    curve.append((0, _nf_from_hist(hist, k)))
+    def step(state: DataFrame, _h: int, _last) -> DataFrame:
+        msgs = state.select(F.col("vid").alias("src"), *[
+            F.col(m).alias(f"v{j}") for j, m in enumerate(mcols)
+        ])
+        agg = (
+            graph.expand(msgs, est_rows=n)  # full-|V| frontier: never broadcast
+            .groupBy("dst")
+            .agg(*[F.bit_or(f"v{j}").alias(f"a{j}") for j in range(k)])
+        )
+        joined = state.join(agg, state["vid"] == agg["dst"], "left")
+        sel = [state["vid"]]
+        changed_terms = []
+        for j in range(k):
+            merged = F.expr(f"m{j} | coalesce(a{j}, 0L)")
+            sel.append(merged.alias(f"m{j}"))
+            changed_terms.append(F.expr(f"(m{j} | coalesce(a{j}, 0L)) != m{j}"))
+        chg = changed_terms[0]
+        for t in changed_terms[1:]:
+            chg = chg | t
+        sel.append(chg.alias("_chg"))
+        return joined.select(*sel)
 
-    prev = None
-    with iteration_plan(spark):
-        for h in range(1, max_h + 1):
-            msgs = state.select(F.col("vid").alias("src"), *[
-                F.col(m).alias(f"v{j}") for j, m in enumerate(mcols)
-            ])
-            agg = (
-                graph.expand(msgs, est_rows=n)  # full-|V| frontier: never broadcast
-                .groupBy("dst")
-                .agg(*[F.bit_or(f"v{j}").alias(f"a{j}") for j in range(k)])
-            )
-            joined = state.join(agg, state["vid"] == agg["dst"], "left")
-            sel = [state["vid"]]
-            changed_terms = []
-            for j in range(k):
-                merged = F.expr(f"m{j} | coalesce(a{j}, 0L)")
-                sel.append(merged.alias(f"m{j}"))
-                changed_terms.append(F.expr(f"(m{j} | coalesce(a{j}, 0L)) != m{j}"))
-            chg = changed_terms[0]
-            for t in changed_terms[1:]:
-                chg = chg | t
-            sel.append(chg.alias("_chg"))
-            new_state = joined.select(*sel).localCheckpoint(eager=False)
-            hist, changed = hist_of(new_state, "_chg")  # the round's ONE action
-            curve.append((h, _nf_from_hist(hist, k)))
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, state = state, new_state.drop("_chg")
-            if changed == 0:
-                break
+    iterate(
+        "anf", graph.vertices().select(
+            "vid", *[_fm_init_limb(j, hash_mode).alias(f"m{j}") for j in range(k)]
+        ),
+        step, probe, rounds=max_h, probe_seed=True,
+        converged=lambda changed, _: changed == 0,
+    )
 
     # converged early: the neighborhood function is flat from here on
     last = curve[-1][1]
@@ -248,41 +241,32 @@ def hyperball_harmonic(
     """
     if k < 1:
         raise ValueError("hyperball_harmonic needs k >= 1 sketch lanes")
-    spark = graph.spark
     n = graph.num_vertices()
     mcols = [f"m{j}" for j in range(k)]
 
-    state = graph.vertices().select(
+    seed = graph.vertices().select(
         "vid", *[_fm_init_limb(j, hash_mode).alias(f"m{j}") for j in range(k)]
-    )
-    state = state.withColumn("s0", _s_expr(k)).localCheckpoint(eager=True)
+    ).withColumn("s0", _s_expr(k))
 
-    with iteration_plan(spark):
-        for h in range(1, max_h + 1):
-            msgs = state.select(F.col("vid").alias("src"), *[
-                F.col(m).alias(f"v{j}") for j, m in enumerate(mcols)
-            ])
-            agg = (
-                graph.expand(msgs, est_rows=n)
-                .groupBy("dst")
-                .agg(*[F.bit_or(f"v{j}").alias(f"a{j}") for j in range(k)])
-            )
-            joined = state.join(agg, state["vid"] == agg["dst"], "left")
-            sel = [state["vid"]] + [
-                F.expr(f"m{j} | coalesce(a{j}, 0L)").alias(f"m{j}") for j in range(k)
-            ]
-            sel += [F.col(f"s{i}") for i in range(h)]
-            prev = state
-            state = (
-                joined.select(*sel)
-                .withColumn(f"s{h}", _s_expr(k))
-                .localCheckpoint(eager=False)
-            )
-            state.count()  # materialize the round; truncates lineage
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
+    def step(state: DataFrame, h: int, _last) -> DataFrame:
+        msgs = state.select(F.col("vid").alias("src"), *[
+            F.col(m).alias(f"v{j}") for j, m in enumerate(mcols)
+        ])
+        agg = (
+            graph.expand(msgs, est_rows=n)
+            .groupBy("dst")
+            .agg(*[F.bit_or(f"v{j}").alias(f"a{j}") for j in range(k)])
+        )
+        joined = state.join(agg, state["vid"] == agg["dst"], "left")
+        sel = [state["vid"]] + [
+            F.expr(f"m{j} | coalesce(a{j}, 0L)").alias(f"m{j}") for j in range(k)
+        ]
+        sel += [F.col(f"s{i}") for i in range(h)]
+        return joined.select(*sel).withColumn(f"s{h}", _s_expr(k))
+
+    state = iterate(
+        "hyperball", seed, step, DataFrame.count, rounds=max_h
+    ).state
 
     out = state.select(
         F.col("vid").cast("long").alias("vid"),

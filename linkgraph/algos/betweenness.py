@@ -30,14 +30,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, broadcast_threshold, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import broadcast_fits, iteration_plan
 
 
-def _bc(df: DataFrame, est_rows: int, ncols: int, thresh: int):
+def _bc(df: DataFrame, est_rows: int, ncols: int):
     """Byte-gated broadcast (LinkGraph.expand's J1 rule) driven by the
     MEASURED per-level row counts the forward pass already tracks — a
     dense middle level is Θ(|roots|·|V|) rows and must NOT broadcast."""
-    if 0 < thresh and est_rows * (16 + 12 * ncols) < thresh:
+    if broadcast_fits(df.sparkSession, est_rows, ncols):
         return F.broadcast(df)
     return df
 
@@ -74,7 +75,6 @@ def betweenness(
     # like sssp.py's frontier_rows: a dense middle level is Θ(|roots|·|V|)
     # rows, and a hardcoded estimate would force-broadcast it (OOM at scale).
     level_rows = [len(roots)]
-    thresh = broadcast_threshold(spark)
     state_rows = len(roots)
     with iteration_plan(spark):
         frontier = state
@@ -90,7 +90,7 @@ def betweenness(
             # anti-join against the accumulated state: byte-gated
             # broadcast on the MEASURED state size so the fresh per-level
             # aggregate never re-shuffles when the state is small
-            seen = _bc(state.select("root", "vid"), state_rows, 2, thresh)
+            seen = _bc(state.select("root", "vid"), state_rows, 2)
             new = (
                 agg.join(
                     seen,
@@ -131,7 +131,7 @@ def betweenness(
             # the successor-side join against the (level-sized) w-frame is
             # the backward pass's heavy hitter: without the gate it
             # re-shuffles the Θ(level·deg) expansion every level
-            wlj = _bc(wl, wl_rows, 4, thresh)
+            wlj = _bc(wl, wl_rows, 4)
             contrib = (
                 succ.join(
                     wlj,
@@ -147,7 +147,7 @@ def betweenness(
                 .groupBy("uroot", "uvid")
                 .agg(F.sum("term").alias("delta"))
             )
-            contrib = _bc(contrib, level_rows[lvl], 3, thresh)
+            contrib = _bc(contrib, level_rows[lvl], 3)
             wl = (
                 u.join(
                     contrib,
@@ -219,7 +219,6 @@ def edge_betweenness(
     ).localCheckpoint(eager=True)
     levels = [state]
     level_rows = [len(roots)]
-    thresh = broadcast_threshold(spark)
     state_rows = len(roots)
     with iteration_plan(spark):
         frontier = state
@@ -230,7 +229,7 @@ def edge_betweenness(
                 .groupBy("root", "dst")
                 .agg(F.sum("sigma").alias("sigma"))
             )
-            seen = _bc(state.select("root", "vid"), state_rows, 2, thresh)
+            seen = _bc(state.select("root", "vid"), state_rows, 2)
             new = (
                 agg.join(
                     seen,
@@ -268,7 +267,7 @@ def edge_betweenness(
                 F.col("sigma").alias("usigma"),
                 "dst",
             )
-            wlj = _bc(wl, wl_rows, 4, thresh)
+            wlj = _bc(wl, wl_rows, 4)
             terms = succ.join(
                 wlj, (succ.uroot == wlj.root) & (succ.dst == wlj.vid)
             ).select(
@@ -292,7 +291,6 @@ def edge_betweenness(
                         ),
                         level_rows[lvl],
                         3,
-                        thresh,
                     ),
                     (u.root == F.col("uroot")) & (u.vid == F.col("uvid")),
                     "left",

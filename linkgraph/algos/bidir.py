@@ -39,7 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iteration_plan
 
 
 def st_distance(

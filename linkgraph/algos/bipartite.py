@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.algos.components import connected_components
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iteration_plan
 
 
 def bipartite_check(graph: LinkGraph, max_levels: int = 64) -> DataFrame:

@@ -40,7 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iterate
 
 MAX_COLORS = 64  # single-limb used-mask capacity
 
@@ -66,86 +67,67 @@ def greedy_coloring(
     if not graph.symmetric:
         raise ValueError("greedy_coloring needs a symmetric graph")
     spark = graph.spark
-    state = (
-        graph.vertices()
-        .select("vid", F.lit(0).cast("long").alias("used"))
-        .localCheckpoint(eager=True)
-    )
-    n_unc = state.count()
     parts: list[DataFrame] = []
-    prev = None
 
-    budget = rounds if rounds is not None else max_rounds
-    with iteration_plan(spark):
-        for r in range(1, budget + 1):
-            if n_unc == 0:
-                break
-            p = state.select("vid", "used", _prio(F.col("vid")).alias("p"))
-            nbrmin = (
-                graph.expand(
-                    p.select(F.col("vid").alias("src"), "p"), est_rows=n_unc
-                )
-                .groupBy("dst")
-                .agg(F.min("p").alias("mn"))
+    def step(state: DataFrame, r: int, n_unc: int) -> DataFrame:
+        p = state.select("vid", "used", _prio(F.col("vid")).alias("p"))
+        nbrmin = (
+            graph.expand(p.select(F.col("vid").alias("src"), "p"), est_rows=n_unc)
+            .groupBy("dst")
+            .agg(F.min("p").alias("mn"))
+        )
+        # python ~/&/| on Columns are the BOOLEAN ops in pyspark; the
+        # integer forms are bitwise_not / .bitwiseAND / .bitwiseOR
+        free = F.bitwise_not(F.col("used")).bitwiseAND(F.col("used") + F.lit(1))
+        # the round's winners outlive the loop state: pinned here
+        w = (
+            p.join(nbrmin, p["vid"] == nbrmin["dst"], "left")
+            .where(F.col("mn").isNull() | (F.col("p") < F.col("mn")))
+            .select(p["vid"], F.bit_count(free - F.lit(1)).alias("color"))
+            .localCheckpoint(eager=True)
+        )
+        # one action: winner count + palette-overflow probe together
+        agg = w.agg(F.count("*").alias("n"), F.max("color").alias("mx")).first()
+        n_w = agg["n"]
+        if n_w > 0 and agg["mx"] >= MAX_COLORS:
+            raise ValueError(
+                f"greedy_coloring: >{MAX_COLORS - 1} neighbor colors at "
+                "some vertex — graph degree exceeds the single-limb "
+                "palette; extend to multi-limb masks for this input"
             )
-            # python ~/&/| on Columns are the BOOLEAN ops in pyspark; the
-            # integer forms are bitwise_not / .bitwiseAND / .bitwiseOR
-            free = F.bitwise_not(F.col("used")).bitwiseAND(
-                F.col("used") + F.lit(1)
+        parts.append(w.select("vid", "color", F.lit(r).alias("colored_round")))
+        # winners broadcast their color bit to every neighbor (ANP bit_or)
+        newbits = (
+            graph.expand(
+                w.select(
+                    F.col("vid").alias("src"),
+                    # F.shiftleft needs a python-int bit count; the SQL
+                    # form takes a column
+                    F.expr("shiftleft(CAST(1 AS BIGINT), color)").alias("b"),
+                ),
+                est_rows=n_w,
             )
-            w = (
-                p.join(nbrmin, p["vid"] == nbrmin["dst"], "left")
-                .where(F.col("mn").isNull() | (F.col("p") < F.col("mn")))
-                .select(
-                    p["vid"], F.bit_count(free - F.lit(1)).alias("color")
-                )
-                .localCheckpoint(eager=True)
+            .groupBy("dst")
+            .agg(F.bit_or("b").alias("nb"))
+        )
+        return (
+            state.join(w.select("vid"), "vid", "left_anti")
+            .join(newbits, state["vid"] == newbits["dst"], "left")
+            .select(
+                state["vid"],
+                F.col("used")
+                .bitwiseOR(F.coalesce(F.col("nb"), F.lit(0).cast("long")))
+                .alias("used"),
             )
-            # one action: winner count + palette-overflow probe together
-            agg = w.agg(
-                F.count("*").alias("n"), F.max("color").alias("mx")
-            ).first()
-            n_w = agg["n"]
-            if n_w > 0 and agg["mx"] >= MAX_COLORS:
-                raise ValueError(
-                    f"greedy_coloring: >{MAX_COLORS - 1} neighbor colors at "
-                    "some vertex — graph degree exceeds the single-limb "
-                    "palette; extend to multi-limb masks for this input"
-                )
-            parts.append(w.select("vid", "color", F.lit(r).alias("colored_round")))
-            # winners broadcast their color bit to every neighbor (ANP bit_or)
-            newbits = (
-                graph.expand(
-                    w.select(
-                        F.col("vid").alias("src"),
-                        # F.shiftleft needs a python-int bit count; the SQL
-                        # form takes a column
-                        F.expr("shiftleft(CAST(1 AS BIGINT), color)").alias("b"),
-                    ),
-                    est_rows=n_w,
-                )
-                .groupBy("dst")
-                .agg(F.bit_or("b").alias("nb"))
-            )
-            nxt = (
-                state.join(w.select("vid"), "vid", "left_anti")
-                .join(newbits, state["vid"] == newbits["dst"], "left")
-                .select(
-                    state["vid"],
-                    F.col("used")
-                    .bitwiseOR(F.coalesce(F.col("nb"), F.lit(0).cast("long")))
-                    .alias("used"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            n_unc = nxt.count()
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev = state
-            state = nxt
+        )
+
+    n_unc = iterate(
+        "coloring",
+        graph.vertices().select("vid", F.lit(0).cast("long").alias("used")),
+        step, DataFrame.count,
+        rounds=rounds if rounds is not None else max_rounds, probe_seed=True,
+        converged=lambda n_unc, _: n_unc == 0, eager=True,
+    ).value
     if n_unc > 0 and rounds is None:
         import warnings
 

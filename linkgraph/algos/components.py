@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
+from linkgraph.loop import Snapshots, broadcast_fits, iterate
 
 
 def connected_components(
@@ -31,7 +32,6 @@ def connected_components(
     checkpoint_mgr=None,
     snapshot_every: int = 10,
     resume: bool = False,
-    verbose: bool = False,
     shortcut: bool = True,
 ) -> DataFrame:
     """Returns (vid, comp) with comp = min vid reachable (undirected
@@ -40,104 +40,83 @@ def connected_components(
 
     Exact at convergence; warns if max_iter exhausts first."""
     n = graph.num_vertices()
-    it0 = 0
-    comp = None
-    if resume and checkpoint_mgr is not None:
-        snap = checkpoint_mgr.latest()
-        if snap is not None:
-            comp = checkpoint_mgr.read_state(snap)
-            it0 = int(snap["metrics"]["iteration"])
+    snapshots = None
+    comp, it0 = None, 0
+    if checkpoint_mgr is not None:
+        snapshots = Snapshots(checkpoint_mgr, snapshot_every, ["vid", "comp"])
+        if resume:
+            comp, it0, _ = snapshots.resume()
     if comp is None:
         comp = graph.vertices().select("vid", F.col("vid").alias("comp"))
-    comp = comp.localCheckpoint(eager=True)
-
-    changed = None
-    prev = None
-    from linkgraph.graph import broadcast_threshold, iteration_plan
 
     # the neighbor-min aggregate and the shortcut mapping are both ≤|V|
     # rows of two longs: byte-gate broadcasts (J1 rule) so the
     # checkpointed label state never re-shuffles per round; past the gate
     # (10^9 vertices) the plain shuffle joins return unchanged
-    _thresh = broadcast_threshold(graph.spark)
-    _bc_ok = 0 < _thresh and n * (16 + 12 * 2) < _thresh
+    bc_ok = broadcast_fits(graph.spark, n, 2)
 
-    with iteration_plan(graph.spark):
-        for it in range(it0, max_iter):
-            labels = comp.select(F.col("vid").alias("src"), F.col("comp").alias("c"))
-            nbr_min = graph.expand(labels, est_rows=n).groupBy("dst").agg(
-                F.min("c").alias("nc")
+    def step(comp: DataFrame, _r: int, _last) -> DataFrame:
+        labels = comp.select(F.col("vid").alias("src"), F.col("comp").alias("c"))
+        nbr_min = graph.expand(labels, est_rows=n).groupBy("dst").agg(
+            F.min("c").alias("nc")
+        )
+        if bc_ok:
+            nbr_min = F.broadcast(nbr_min)
+        new_comp = (
+            comp.alias("st")
+            .join(nbr_min.alias("nb"), F.col("st.vid") == F.col("nb.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.least(
+                    F.col("st.comp"), F.coalesce(F.col("nb.nc"), F.col("st.comp"))
+                ).alias("comp"),
+                F.col("st.comp").alias("pc"),
             )
-            if _bc_ok:
-                nbr_min = F.broadcast(nbr_min)
-            new_comp = (
-                comp.alias("st")
-                .join(nbr_min.alias("nb"), F.col("st.vid") == F.col("nb.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.least(
-                        F.col("st.comp"), F.coalesce(F.col("nb.nc"), F.col("st.comp"))
-                    ).alias("comp"),
-                    F.col("st.comp").alias("pc"),
-                )
+        )
+        if not shortcut:
+            return new_comp
+        # pointer doubling: comp(v) <- min(comp(v), comp(comp(v))).
+        # comp values are vids, so the label table doubles as the
+        # parent mapping; one extra equi-join per round buys O(log d)
+        # total rounds instead of O(d).
+        mapping = comp.select(F.col("vid").alias("comp"), F.col("comp").alias("cc"))
+        if bc_ok:
+            mapping = F.broadcast(mapping)
+        return (
+            new_comp.alias("nc2")
+            .join(mapping.alias("mp"), "comp", "left")
+            .select(
+                F.col("nc2.vid").alias("vid"),
+                F.least(
+                    F.col("comp"), F.coalesce(F.col("mp.cc"), F.col("comp"))
+                ).alias("comp"),
+                F.col("nc2.pc").alias("pc"),
             )
-            if shortcut:
-                # pointer doubling: comp(v) <- min(comp(v), comp(comp(v))).
-                # comp values are vids, so the label table doubles as the
-                # parent mapping; one extra equi-join per round buys O(log d)
-                # total rounds instead of O(d).
-                mapping = comp.select(
-                    F.col("vid").alias("comp"), F.col("comp").alias("cc")
-                )
-                if _bc_ok:
-                    mapping = F.broadcast(mapping)
-                new_comp = (
-                    new_comp.alias("nc2")
-                    .join(mapping.alias("mp"), "comp", "left")
-                    .select(
-                        F.col("nc2.vid").alias("vid"),
-                        F.least(
-                            F.col("comp"), F.coalesce(F.col("mp.cc"), F.col("comp"))
-                        ).alias("comp"),
-                        F.col("nc2.pc").alias("pc"),
-                    )
-                )
-            # LAZY checkpoint materialized by the changed-count aggregate:
-            # one fused job per round (see pagerank.py — the lazy pathology
-            # was AQE-specific and this loop runs AQE-off)
-            new_comp = new_comp.localCheckpoint(eager=False)
-            changed = int(
-                new_comp.agg(
-                    F.sum(F.when(F.col("comp") != F.col("pc"), 1).otherwise(0)).alias("n")
-                ).first()["n"]
-                or 0
-            )
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, comp = comp, new_comp
-            if verbose:
-                print(f"[cc] iter {it}: changed={changed}", flush=True)
-            if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
-                comp = checkpoint_mgr.write_state(
-                    comp.select("vid", "comp"), it + 1,
-                    {"iteration": it + 1, "changed": int(changed)},
-                ).localCheckpoint(eager=True)
-            if changed == 0:
-                break
+        )
+
+    def probe(comp: DataFrame) -> dict:
+        changed = comp.agg(
+            F.sum(F.when(F.col("comp") != F.col("pc"), 1).otherwise(0)).alias("n")
+        ).first()["n"]
+        return {"changed": int(changed or 0)}
+
+    run = iterate(
+        "cc", comp, step, probe,
+        rounds=max_iter, start=it0,
+        converged=lambda v, _: v["changed"] == 0, snapshots=snapshots,
+    )
+    changed = run.value["changed"] if run.value else 0
     if changed:
         warnings.warn(
             f"connected_components: max_iter={max_iter} exhausted with "
             f"{changed} labels still changing — result is NOT converged",
             stacklevel=2,
         )
-    return comp.select("vid", "comp")
+    return run.state.select("vid", "comp")
 
 
 def connected_components_two_phase(
-    graph: LinkGraph, max_rounds: int = 64, verbose: bool = False
+    graph: LinkGraph, max_rounds: int = 64
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star edge
     rewrites [Kiveris et al., "Connected Components in MapReduce and
@@ -178,7 +157,6 @@ def connected_components_two_phase(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def _probe(df: DataFrame) -> tuple[int, int]:
@@ -193,83 +171,57 @@ def connected_components_two_phase(
     # per-round min tables are ≤|V| rows of two longs — byte-gate their
     # broadcasts (J1 rule) so the edge set never re-shuffles for the
     # re-point joins; past the gate the shuffle joins return unchanged
-    from linkgraph.graph import broadcast_threshold
-
-    _thresh = broadcast_threshold(spark)
-    _bc_ok = 0 < _thresh and graph.num_vertices() * (16 + 12 * 2) < _thresh
+    bc_ok = broadcast_fits(spark, graph.num_vertices(), 2)
 
     def _bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if _bc_ok else df
+        return F.broadcast(df) if bc_ok else df
 
-    prev_sig = _probe(e)
-    converged = False
-    prev_e = None
-    from linkgraph.graph import iteration_plan
+    def step(e: DataFrame, _r: int, _last) -> DataFrame:
+        # ---- large-star over the symmetric view: neighbors larger
+        # than the center re-point to the center's min
+        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = (
+            sym.groupBy("u")
+            .agg(F.min("v").alias("mn"))
+            .select("u", F.least("mn", "u").alias("m"))
+        )
+        # e is strictly child>parent (u > v) by construction, so the
+        # v>u half of sym is exactly reverse(e) — project it directly
+        # instead of re-scanning and filtering the 2|e|-row union.
+        # No intermediate distinct: large-star emits ≤|e| rows (one per
+        # input edge), duplicates are invariant under small-star's min
+        # aggregate, and the end-of-round distinct collapses them — so
+        # deduping here bought nothing but a full extra shuffle per
+        # round (A/B: 7.5s → 6.5s on the sf0.1 bench entry).
+        e = (
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            .join(_bc(mins), "u")
+            .where(F.col("v") != F.col("m"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+        # ---- small-star: all ≤-neighbors plus the center re-point to
+        # the center's min neighbor (edges are already child>parent)
+        smins = e.groupBy("u").agg(F.min("v").alias("m"))
+        return (
+            e.join(_bc(smins), "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))  # sibling -> min
+            .where(F.col("u") != F.col("v"))
+            .unionByName(smins.select(F.col("u"), F.col("m").alias("v")))  # center -> min
+            .distinct()
+        )
 
-    with iteration_plan(spark):
-        for rnd in range(max_rounds):
-            # ---- large-star over the symmetric view: neighbors larger
-            # than the center re-point to the center's min
-            sym = e.unionByName(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = (
-                sym.groupBy("u")
-                .agg(F.min("v").alias("mn"))
-                .select("u", F.least("mn", "u").alias("m"))
-            )
-            # e is strictly child>parent (u > v) by construction, so the
-            # v>u half of sym is exactly reverse(e) — project it directly
-            # instead of re-scanning and filtering the 2|e|-row union.
-            # No intermediate distinct: large-star emits ≤|e| rows (one per
-            # input edge), duplicates are invariant under small-star's min
-            # aggregate, and the end-of-round distinct collapses them — so
-            # deduping here bought nothing but a full extra shuffle per
-            # round (A/B: 7.5s → 6.5s on the sf0.1 bench entry).
-            e = (
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-                .join(_bc(mins), "u")
-                .where(F.col("v") != F.col("m"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
-            # ---- small-star: all ≤-neighbors plus the center re-point to
-            # the center's min neighbor (edges are already child>parent)
-            smins = e.groupBy("u").agg(F.min("v").alias("m"))
-            e = (
-                e.join(_bc(smins), "u")
-                .select(
-                    F.col("v").alias("u"), F.col("m").alias("v")
-                )  # sibling -> min
-                .where(F.col("u") != F.col("v"))
-                .unionByName(
-                    smins.select(F.col("u"), F.col("m").alias("v"))
-                )  # center -> min
-                .distinct()
-                # LAZY checkpoint materialized by the probe aggregate —
-                # one fused job per round instead of checkpoint + probe
-                # (safe: the loop runs AQE-off, the cc/pagerank pattern)
-                .localCheckpoint(eager=False)
-            )
-            sig = _probe(e)
-            if prev_e is not None:
-                try:
-                    prev_e.unpersist()
-                except Exception:
-                    pass
-            prev_e = e
-            if verbose:
-                print(f"[cc2p] round {rnd}: edges={sig[0]}", flush=True)
-            if sig == prev_sig:
-                converged = True
-                break
-            prev_sig = sig
-    if not converged:
+    run = iterate(
+        "cc2p", e, step, _probe, rounds=max_rounds, probe_seed=True,
+        converged=lambda sig, prev_sig: sig == prev_sig,
+    )
+    if not run.converged:
         warnings.warn(
             f"connected_components_two_phase: max_rounds={max_rounds} "
             "exhausted before the star-forest fixpoint — result may be "
             "unconverged",
             stacklevel=2,
         )
+    e = run.state
     roots = e.select(F.col("u").alias("vid"), F.col("v").alias("comp"))
     return (
         graph.vertices()

@@ -30,10 +30,9 @@ Per round, everything derives from ONE induced-degree aggregate:
   * the peel is a filter on the degree table; edge survival is two
     semi-joins against the surviving vertex set.
 The edge table is referenced three times per round (degree + two
-semi-joins), so the surviving edge set round-trips scc.py's parquet
-scratch store every SEVER_EVERY rounds (the louvain/k-truss
-statistics-severance rationale) — which also matches the operator's
-restartable round-boundary shape at 100 TB.
+semi-joins), so the round loop runs with loop.iterate's `sever` (the
+louvain/k-truss statistics-severance rationale) — which also matches the
+operator's restartable round-boundary shape at 100 TB.
 
 Returns the per-round peel curve: one row per executed round,
 (round, n_vertices, e_directed, density, peeled) describing the
@@ -47,8 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.algos.scc import SEVER_EVERY, _Store
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iterate
 
 
 def densest_subgraph_curve(
@@ -61,53 +60,34 @@ def densest_subgraph_curve(
     if not graph.symmetric:
         raise ValueError("densest_subgraph_curve needs a symmetric graph")
     spark = graph.spark
-    edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
-    budget = rounds if rounds is not None else max_rounds
-    curve: list[tuple[int, int, int, int]] = []
-    prev = None
+    sizes: list[tuple[int, int]] = []  # (|S|, E_dir) of each round's start
 
-    store = _Store(spark)
-    try:
-        with iteration_plan(spark):
-            for r in range(1, budget + 1):
-                deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-                stats = deg.agg(
-                    F.count("*").alias("n"), F.sum("deg").alias("e_dir")
-                ).first()
-                n, e_dir = int(stats["n"] or 0), int(stats["e_dir"] or 0)
-                if n == 0:
-                    break
-                # peel: 2*deg*|S| <= 3*E_dir  <=>  deg <= 1.5 * avg
-                keep = deg.where(
-                    2 * F.col("deg") * F.lit(n) > 3 * F.lit(e_dir)
-                ).select("src")
-                nxt = (
-                    edges.join(keep, "src", "left_semi")
-                    .join(
-                        keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
-                    )
-                    .select("src", "dst")
-                )
-                if r % SEVER_EVERY == 0:
-                    nxt = store.sever(nxt)
-                else:
-                    nxt = nxt.localCheckpoint(eager=False)
-                # the survivor-degree count materializes the lazy checkpoint
-                n_next = int(
-                    nxt.agg(F.countDistinct("src").alias("n")).first()["n"] or 0
-                )
-                curve.append((r, n, e_dir, n - n_next))
-                if prev is not None:
-                    try:
-                        prev.unpersist()
-                    except Exception:
-                        pass
-                prev = edges
-                edges = nxt
-                if n_next == 0:
-                    break
-    finally:
-        store.cleanup()
+    def probe(edges: DataFrame) -> tuple[int, int]:
+        row = edges.agg(F.countDistinct("src").alias("n"), F.count("*").alias("e")).first()
+        sizes.append((int(row["n"] or 0), int(row["e"] or 0)))
+        return sizes[-1]
+
+    def step(edges: DataFrame, _r: int, size: tuple[int, int]) -> DataFrame:
+        n, e_dir = size
+        deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+        # peel: 2*deg*|S| <= 3*E_dir  <=>  deg <= 1.5 * avg
+        keep = deg.where(2 * F.col("deg") * F.lit(n) > 3 * F.lit(e_dir)).select("src")
+        return (
+            edges.join(keep, "src", "left_semi")
+            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
+            .select("src", "dst")
+        )
+
+    iterate(
+        "densest", graph.edges.select("src", "dst"), step, probe,
+        rounds=rounds if rounds is not None else max_rounds, probe_seed=True,
+        converged=lambda size, _: size[0] == 0, sever=True,
+    )
+    curve = [
+        (r, n, e_dir, n - sizes[r][0])
+        for r, (n, e_dir) in enumerate(sizes[:-1], start=1)
+        if n > 0
+    ]
     if rounds is None and curve and curve[-1][1] - curve[-1][3] > 0:
         import warnings
 

@@ -4,8 +4,7 @@ x_{t+1} = A^T x_t with x_0 = 1, scaled ONCE at the end by max(x_K) —
 mathematically identical to the textbook per-round L-inf normalization
 (scaling commutes with the linear map), but it keeps every round the
 exact PR/Katz kernel shape (ONE frontier-expand + ONE sum-by-dst + the
-update join, fused into a single job by the lazy-localCheckpoint-plus-
-action pattern) AND makes the fixed-round contract expressible as a
+update join, one job per round) AND makes the fixed-round contract expressible as a
 plain recursive-CTE oracle: per-round normalization would need an
 aggregate over the in-flight recursive term, which SQL's recursive CTEs
 cannot express.
@@ -27,43 +26,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iterate
 
 
 def eigenvector_centrality(graph: LinkGraph, rounds: int = 8) -> DataFrame:
     """Returns (vid, ec) with max(ec) = 1 after `rounds` power steps."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    spark = graph.spark
     n = graph.num_vertices()
-    state = (
-        graph.vertices()
-        .select("vid", F.lit(1.0).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    prev = None
-    with iteration_plan(spark):
-        for _ in range(rounds):
-            msgs = state.select(F.col("vid").alias("src"), F.col("x").alias("m"))
-            acc = graph.expand(msgs, est_rows=n).groupBy("dst").agg(
-                F.sum("m").alias("acc")
+    def step(st: DataFrame, _r: int, _last) -> DataFrame:
+        msgs = st.select(F.col("vid").alias("src"), F.col("x").alias("m"))
+        acc = graph.expand(msgs, est_rows=n).groupBy("dst").agg(F.sum("m").alias("acc"))
+        return (
+            st.alias("st")
+            .join(acc.alias("cb"), F.col("st.vid") == F.col("cb.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.coalesce(F.col("cb.acc"), F.lit(0.0)).alias("x"),
             )
-            new_state = (
-                state.alias("st")
-                .join(acc.alias("cb"), F.col("st.vid") == F.col("cb.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.coalesce(F.col("cb.acc"), F.lit(0.0)).alias("x"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            new_state.count()  # materialize: one fused job per round
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, state = state, new_state
+        )
+
+    state = iterate(
+        "eigenvector", graph.vertices().select("vid", F.lit(1.0).alias("x")),
+        step, DataFrame.count, rounds=rounds,
+    ).state
     mx = state.agg(F.max("x").alias("mx"))
     return (
         state.crossJoin(F.broadcast(mx))

@@ -16,14 +16,12 @@ Plan shape (the PR one-job-per-step discipline):
   round), the constructor builds a transpose LinkGraph once — the CSC to
   the forward table's CSR, the same pairing every matrix engine keeps for
   A·x vs Aᵀ·x — and both half-steps become co-partitioned expands;
-* each half-step is ONE Spark job: expand + aggregate + lazy
-  localCheckpoint, materialized by the Σx² norm aggregate whose scalar
-  then rides into the next half-step as a literal (the normalization
-  division never needs its own pass).  Vertices receiving no mass stay
-  absent from the loop state (zero rows change neither the norm nor the
-  next expansion); the vertex set is attached once at the end;
-* runs under iteration_plan (AQE off, shuffled-hash) like every other
-  iterative kernel here.
+* each half-step is ONE Spark job (one loop.iterate round): expand +
+  aggregate, probed by the Σx² norm aggregate whose scalar then rides
+  into the next half-step as a literal (the normalization division
+  never needs its own pass).  Vertices receiving no mass stay absent
+  from the loop state (zero rows change neither the norm nor the next
+  expansion); the vertex set is attached once at the end.
 
 Determinism: float summation order differs across engines, so outputs
 are rounded (`round_to`) for oracle comparison; raw doubles agree to
@@ -37,7 +35,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iterate
 
 
 def hits(
@@ -53,7 +52,6 @@ def hits(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    spark = graph.spark
     own_transpose = transpose is None
     gt = transpose or LinkGraph(
         graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
@@ -62,41 +60,36 @@ def hits(
     verts = graph.vertices().select("vid").localCheckpoint(eager=True)
     n = verts.count()
 
-    # hub starts uniform at 1/sqrt(n) (unit L2 norm) — any positive start
-    # converges; unit-norm keeps intermediate magnitudes O(1).
-    h = verts.select("vid", F.lit(1.0 / math.sqrt(n)).alias("x"))
+    norms: list[float] = []
 
-    def half_step(g: LinkGraph, scores: DataFrame) -> DataFrame:
-        """One normalized half-step: flow `scores` along g's edges, sum
-        per destination.  Vertices receiving no mass are simply ABSENT
-        from the result — a zero score contributes nothing to the next
-        expansion nor to the L2 norm, so carrying explicit zero rows
-        through the loop (the old per-half-step |V|-row verts left-join)
-        was pure overhead; the full vertex set is re-attached once at the
-        end."""
-        msgs = scores.select(F.col("vid").alias("src"), "x")
-        raw = (
-            g.expand(msgs, est_rows=n)
+    def half_step(raw: DataFrame, r: int, norm: float) -> DataFrame:
+        """One half-step: flow the normalized scores along the forward
+        edges (odd r: auth(v) = Σ hub over in-edges) or the transpose
+        (even r: hub(u) = Σ auth over out-edges), summed per destination.
+        Vertices receiving no mass are simply ABSENT from the result — a
+        zero score contributes nothing to the next expansion nor to the
+        L2 norm, so the full vertex set is re-attached once at the end."""
+        msgs = raw.select(F.col("vid").alias("src"), (F.col("x") / F.lit(norm)).alias("x"))
+        return (
+            (graph if r % 2 else gt).expand(msgs, est_rows=n)
             .groupBy("dst")
             .agg(F.sum("x").alias("x"))
             .withColumnRenamed("dst", "vid")
-            .localCheckpoint(eager=False)
         )
-        norm = math.sqrt(raw.agg(F.sum(F.col("x") * F.col("x")).alias("s")).first()["s"])
-        return raw.select("vid", (F.col("x") / F.lit(norm)).alias("x")), raw
 
-    retained: list[DataFrame] = []
-    with iteration_plan(spark):
-        a = None
-        for _ in range(rounds):
-            a, keep_a = half_step(graph, h)      # auth(v) = Σ hub over in-edges
-            h, keep_h = half_step(gt, a)         # hub(u)  = Σ auth over out-edges
-            for old in retained:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-            retained = [keep_a, keep_h]
+    def l2(raw: DataFrame) -> float:
+        sq = raw.agg(F.sum(F.col("x") * F.col("x")).alias("s")).first()["s"]
+        norms.append(math.sqrt(sq))
+        return norms[-1]
+
+    # hub starts uniform at 1/sqrt(n) (unit L2 norm) — any positive start
+    # converges; unit-norm keeps intermediate magnitudes O(1).
+    raw_a, raw_h = iterate(
+        "hits", verts.select("vid", F.lit(1.0 / math.sqrt(n)).alias("x")),
+        half_step, l2, rounds=2 * rounds, last=1.0, keep=2,
+    ).kept
+    a = raw_a.select("vid", (F.col("x") / F.lit(norms[-2])).alias("x"))
+    h = raw_h.select("vid", (F.col("x") / F.lit(norms[-1])).alias("x"))
 
     hub_col = F.coalesce(F.col("h.x"), F.lit(0.0))
     auth_col = F.coalesce(F.col("a.x"), F.lit(0.0))

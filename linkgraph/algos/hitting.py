@@ -18,7 +18,7 @@ scores are directly comparable across seed sets.
 Plan shape: one expand job per round over the symmetric edge table (the
 PageRank discipline) — messages carry h_{t-1}, the bitwise identical
 degree division rides the post-aggregate projection, and each round is
-eager-localCheckpointed so the plan never grows.
+checkpointed eagerly so the plan never grows.
 """
 
 from __future__ import annotations
@@ -26,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iterate
 
 
 def hitting_time(
@@ -40,44 +41,33 @@ def hitting_time(
         raise ValueError("rounds must be >= 1")
     if not seeds:
         raise ValueError("hitting_time needs at least one seed")
-    spark = graph.spark
     verts = (
         graph.degrees()
         .withColumn("is_seed", F.col("vid").isin([int(s) for s in seeds]))
         .localCheckpoint(eager=True)
     )
-    h = verts.select("vid", F.lit(0.0).alias("x"))
     n = verts.count()
 
-    retained: list[DataFrame] = []
-    with iteration_plan(spark):
-        for _ in range(rounds):
-            msgs = h.select(F.col("vid").alias("src"), "x")
-            acc = (
-                graph.expand(msgs, est_rows=n)
-                .groupBy("dst")
-                .agg(F.sum("x").alias("acc"))
-            )
-            h = (
-                verts.alias("v")
-                .join(acc.alias("a"), F.col("v.vid") == F.col("a.dst"), "left")
-                .select(
-                    F.col("v.vid").alias("vid"),
-                    F.when(F.col("v.is_seed"), F.lit(0.0))
-                    .otherwise(
-                        F.lit(1.0)
-                        + F.coalesce(F.col("a.acc"), F.lit(0.0)) / F.col("v.deg")
-                    )
-                    .alias("x"),
+    def step(h: DataFrame, _r: int, _last) -> DataFrame:
+        msgs = h.select(F.col("vid").alias("src"), "x")
+        acc = graph.expand(msgs, est_rows=n).groupBy("dst").agg(F.sum("x").alias("acc"))
+        return (
+            verts.alias("v")
+            .join(acc.alias("a"), F.col("v.vid") == F.col("a.dst"), "left")
+            .select(
+                F.col("v.vid").alias("vid"),
+                F.when(F.col("v.is_seed"), F.lit(0.0))
+                .otherwise(
+                    F.lit(1.0) + F.coalesce(F.col("a.acc"), F.lit(0.0)) / F.col("v.deg")
                 )
-                .localCheckpoint(eager=True)
+                .alias("x"),
             )
-            for old in retained:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-            retained = [h]
+        )
+
+    h = iterate(
+        "hitting_time", verts.select("vid", F.lit(0.0).alias("x")), step,
+        rounds=rounds, eager=True,
+    ).state
 
     out_col = F.col("x")
     if round_to is not None:

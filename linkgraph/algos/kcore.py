@@ -5,7 +5,7 @@ The k-core is the maximal induced subgraph where every vertex has degree
 two semi-joins restricting edges to surviving endpoints — all relational,
 co-partitioned on src under `iteration_plan` (AQE off, shuffled-hash),
 lineage cut per round via lazy localCheckpoint materialized by the
-survivor-count action (the PR/CC/LPA one-job-per-iteration shape).
+survivor-count action.
 
 Scale posture: the surviving edge set only shrinks, so per-round cost is
 monotonically decreasing; the degree aggregate is a partial+final count
@@ -23,7 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import broadcast_fits, iterate, iteration_plan
 
 
 def k_core(graph: LinkGraph, k: int, rounds: int | None = None) -> DataFrame:
@@ -38,15 +39,11 @@ def k_core(graph: LinkGraph, k: int, rounds: int | None = None) -> DataFrame:
         raise ValueError("k must be >= 0")
     spark = graph.spark
     edges = graph.edges.select("src", "dst")
-    from linkgraph.graph import broadcast_threshold
-
-    _thresh = broadcast_threshold(spark)
 
     with iteration_plan(spark):
         cur = edges
         prev_n: int | None = None
         r = 0
-        prev_keep = None
         while True:
             keep = (
                 cur.groupBy("src")
@@ -60,12 +57,8 @@ def k_core(graph: LinkGraph, k: int, rounds: int | None = None) -> DataFrame:
             done = (rounds is None and n == prev_n) or (
                 rounds is not None and r >= rounds
             )
-            if prev_keep is not None:
-                try:
-                    prev_keep.unpersist()
-                except Exception:
-                    pass
-            prev_keep = keep
+            # no round's keep is released: `cur` semi-joins every earlier
+            # round's survivors, so all of them stay read by the next round
             if done or n == 0:
                 break
             prev_n = n
@@ -75,7 +68,7 @@ def k_core(graph: LinkGraph, k: int, rounds: int | None = None) -> DataFrame:
             # the shrinking edge set never re-shuffles round over round;
             # past the gate the plain shuffle semi-joins return unchanged
             kv = keep.select("vid")
-            if 0 < _thresh and n * (16 + 12) < _thresh:
+            if broadcast_fits(spark, n, 1):
                 kv = F.broadcast(kv)
             cur = (
                 cur.join(kv, cur.src == F.col("vid"), "left_semi")
@@ -134,44 +127,32 @@ def coreness(
     """
     from pyspark.sql import Window
 
-    spark = graph.spark
-    c = graph.degrees().select("vid", F.col("deg").cast("long").alias("c"))
-    c = c.localCheckpoint(eager=True)
-    n_rounds = rounds if rounds is not None else max_rounds
-    converged = False
-    with iteration_plan(spark):
-        for _ in range(n_rounds):
-            cd = c.select(F.col("vid").alias("dst"), F.col("c").alias("cd"))
-            ev = graph.edges.select("src", "dst").join(cd, "dst")
-            w = Window.partitionBy("src").orderBy(
-                F.col("cd").desc(), F.col("dst").asc()
-            )
-            new = (
-                ev.select("src", "cd", F.row_number().over(w).alias("rn"))
-                .groupBy("src")
-                .agg(F.max(F.least(F.col("rn").cast("long"), F.col("cd"))).alias("c"))
-                .select(F.col("src").alias("vid"), "c")
-                .localCheckpoint(eager=False)
-            )
-            if rounds is None:
-                changed = (
-                    new.alias("n")
-                    .join(c.alias("o"), "vid")
-                    .where(F.col("n.c") != F.col("o.c"))
-                    .count()
-                )
-            else:
-                new.count()
-                changed = -1
-            try:
-                c.unpersist()
-            except Exception:
-                pass
-            c = new
-            if changed == 0:
-                converged = True
-                break
-    if rounds is None and not converged:
+    def step(c: DataFrame, _r: int, _last) -> DataFrame:
+        cd = c.select(F.col("vid").alias("dst"), F.col("c").alias("cd"))
+        ev = graph.edges.select("src", "dst").join(cd, "dst")
+        w = Window.partitionBy("src").orderBy(F.col("cd").desc(), F.col("dst").asc())
+        new = (
+            ev.select("src", "cd", F.row_number().over(w).alias("rn"))
+            .groupBy("src")
+            .agg(F.max(F.least(F.col("rn").cast("long"), F.col("cd"))).alias("c"))
+            .select(F.col("src").alias("vid"), "c")
+        )
+        if rounds is not None:
+            return new
+        # the fixpoint probe compares against the previous value
+        return new.join(c.select("vid", F.col("c").alias("pc")), "vid")
+
+    def changed(c: DataFrame) -> int:
+        return c.where(F.col("c") != F.col("pc")).count()
+
+    run = iterate(
+        "coreness",
+        graph.degrees().select("vid", F.col("deg").cast("long").alias("c")),
+        step, DataFrame.count if rounds is not None else changed,
+        rounds=rounds if rounds is not None else max_rounds,
+        converged=lambda n_changed, _: rounds is None and n_changed == 0,
+    )
+    if rounds is None and not run.converged:
         import warnings
 
         warnings.warn(
@@ -179,4 +160,6 @@ def coreness(
             "H-index fixpoint — values may still decrease",
             stacklevel=2,
         )
-    return c.select(F.col("vid").cast("long"), F.col("c").cast("long").alias("coreness"))
+    return run.state.select(
+        F.col("vid").cast("long"), F.col("c").cast("long").alias("coreness")
+    )

@@ -61,7 +61,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, edge_store_root, iteration_plan
+from linkgraph.graph import LinkGraph, edge_store_root
+from linkgraph.loop import iteration_plan
 
 
 def _supports(t: DataFrame) -> DataFrame:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
+from linkgraph.loop import Snapshots, iterate
 
 
 def label_propagation(
@@ -25,7 +26,6 @@ def label_propagation(
     checkpoint_mgr=None,
     snapshot_every: int = 5,
     resume: bool = False,
-    verbose: bool = False,
 ) -> DataFrame:
     """Returns (vid, label).
 
@@ -36,88 +36,64 @@ def label_propagation(
     iterative kernels, and LPA is deterministic, so a resumed run equals an
     uninterrupted one bit-for-bit (tested)."""
     n = graph.num_vertices()
-    it0 = 0
-    labels = None
-    if resume and checkpoint_mgr is not None:
-        snap = checkpoint_mgr.latest()
-        if snap is not None:
-            labels = checkpoint_mgr.read_state(snap)
-            it0 = int(snap["metrics"]["iteration"])
+    snapshots = None
+    labels, it0 = None, 0
+    if checkpoint_mgr is not None:
+        snapshots = Snapshots(checkpoint_mgr, snapshot_every, ["vid", "label"])
+        if resume:
+            labels, it0, _ = snapshots.resume()
     if labels is None:
         labels = graph.vertices().select("vid", F.col("vid").alias("label"))
-    labels = labels.localCheckpoint(eager=True)
-
-    changed = None
-    prev = None
-    from linkgraph.graph import iteration_plan
 
     nparts = int(graph.spark.conf.get("spark.sql.shuffle.partitions"))
-    with iteration_plan(graph.spark):
-        for it in range(it0, max_iter):
-            msgs = labels.select(F.col("vid").alias("src"), F.col("label").alias("l"))
-            # one explicit dst exchange feeds BOTH aggregates: the vote
-            # count clusters on (dst,l) and the argmax on (dst), and
-            # HashPartitioning(dst) satisfies both (subset rule) — the
-            # louvain round's measured pattern (11.0s -> 9.2s there).
-            # (dst,l) pairs are near-unique while labels are still
-            # distinct, so the forfeited map-side partial agg compressed
-            # little; counts are integers, so the result is bit-identical.
-            votes = (
-                graph.expand(msgs, est_rows=n)
-                .select("dst", "l")
-                .repartition(nparts, "dst")
-                .groupBy("dst", "l")
-                .agg(F.count("*").alias("n"))
-            )
-            # argmax(n, tie -> min l) as ONE hash aggregate: min over
-            # struct(-n, l) orders by count desc then label asc.  The
-            # groupBy+row_number window form costs an extra exchange + sort
-            # on dst per round; this is a partial+final agg on the same key.
-            winner = votes.groupBy("dst").agg(
-                F.min(F.struct((-F.col("n")).alias("nn"), F.col("l"))).alias("m")
-            ).select(F.col("dst"), F.col("m.l").alias("new_label"))
-            new_labels = (
-                labels.alias("st")
-                .join(winner.alias("wn"), F.col("st.vid") == F.col("wn.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.coalesce(F.col("wn.new_label"), F.col("st.label")).alias("label"),
-                    F.col("st.label").alias("pl"),
-                )
-                # lazy: materialized by the changed-count aggregate — one
-                # fused job per round (AQE-off loop; see pagerank.py)
-                .localCheckpoint(eager=False)
-            )
-            changed = int(
-                new_labels.agg(
-                    F.sum(F.when(F.col("label") != F.col("pl"), 1).otherwise(0)).alias("n")
-                ).first()["n"]
-                or 0
-            )
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, labels = labels, new_labels
-            if verbose:
-                print(f"[lpa] iter {it}: changed={changed}", flush=True)
-            if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
-                labels = checkpoint_mgr.write_state(
-                    labels.select("vid", "label"), it + 1,
-                    {"iteration": it + 1, "changed": int(changed)},
-                ).localCheckpoint(eager=True)
-            if changed == 0:
-                break
-    if changed and verbose:
-        # a fixed iteration budget is normal operation for LPA — note it
-        # rather than warn (CC, whose docstring promises exactness, warns)
-        print(
-            f"[lpa] iteration budget exhausted with {changed} labels still "
-            f"changing (budget snapshot returned)",
-            flush=True,
+
+    def step(labels: DataFrame, _r: int, _last) -> DataFrame:
+        msgs = labels.select(F.col("vid").alias("src"), F.col("label").alias("l"))
+        # one explicit dst exchange feeds BOTH aggregates: the vote
+        # count clusters on (dst,l) and the argmax on (dst), and
+        # HashPartitioning(dst) satisfies both (subset rule) — the
+        # louvain round's measured pattern (11.0s -> 9.2s there).
+        # (dst,l) pairs are near-unique while labels are still
+        # distinct, so the forfeited map-side partial agg compressed
+        # little; counts are integers, so the result is bit-identical.
+        votes = (
+            graph.expand(msgs, est_rows=n)
+            .select("dst", "l")
+            .repartition(nparts, "dst")
+            .groupBy("dst", "l")
+            .agg(F.count("*").alias("n"))
         )
-    return labels.select("vid", "label")
+        # argmax(n, tie -> min l) as ONE hash aggregate: min over
+        # struct(-n, l) orders by count desc then label asc.  The
+        # groupBy+row_number window form costs an extra exchange + sort
+        # on dst per round; this is a partial+final agg on the same key.
+        winner = votes.groupBy("dst").agg(
+            F.min(F.struct((-F.col("n")).alias("nn"), F.col("l"))).alias("m")
+        ).select(F.col("dst"), F.col("m.l").alias("new_label"))
+        return (
+            labels.alias("st")
+            .join(winner.alias("wn"), F.col("st.vid") == F.col("wn.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.coalesce(F.col("wn.new_label"), F.col("st.label")).alias("label"),
+                F.col("st.label").alias("pl"),
+            )
+        )
+
+    def probe(labels: DataFrame) -> dict:
+        changed = labels.agg(
+            F.sum(F.when(F.col("label") != F.col("pl"), 1).otherwise(0)).alias("n")
+        ).first()["n"]
+        return {"changed": int(changed or 0)}
+
+    # a fixed iteration budget is normal operation for LPA, so running out
+    # of it is not warned about (CC, whose docstring promises exactness, warns)
+    run = iterate(
+        "lpa", labels, step, probe,
+        rounds=max_iter, start=it0,
+        converged=lambda v, _: v["changed"] == 0, snapshots=snapshots,
+    )
+    return run.state.select("vid", "label")
 
 
 def label_spreading(
@@ -150,44 +126,32 @@ def label_spreading(
     """
     if not 0 < alpha < 1:
         raise ValueError("alpha must be in (0, 1)")
-    spark = graph.spark
     n = graph.num_vertices()
     y = seeds.select(
         F.col("vid").cast("long").alias("vid"),
         F.col("label").cast("long").alias("label"),
         F.lit(1.0 - alpha).alias("s"),
     ).localCheckpoint(eager=True)
-    f = y.select("vid", "label", F.col("s").alias("score"))
-    from linkgraph.graph import iteration_plan
 
-    prev = None
-    with iteration_plan(spark):
-        for _ in range(rounds):
-            msgs = f.select(F.col("vid").alias("src"), "label", "score")
-            agg = (
-                graph.expand(msgs, est_rows=n)
-                .groupBy(F.col("dst").alias("vid"), "label")
-                .agg((F.lit(float(alpha)) * F.sum("score")).alias("m"))
-            )
-            new_f = (
-                agg.join(y, ["vid", "label"], "full_outer")
-                .select(
-                    "vid",
-                    "label",
-                    (
-                        F.coalesce(F.col("m"), F.lit(0.0))
-                        + F.coalesce(F.col("s"), F.lit(0.0))
-                    ).alias("score"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            new_f.count()
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, f = f, new_f
+    def step(f: DataFrame, _r: int, _last) -> DataFrame:
+        msgs = f.select(F.col("vid").alias("src"), "label", "score")
+        agg = (
+            graph.expand(msgs, est_rows=n)
+            .groupBy(F.col("dst").alias("vid"), "label")
+            .agg((F.lit(float(alpha)) * F.sum("score")).alias("m"))
+        )
+        return agg.join(y, ["vid", "label"], "full_outer").select(
+            "vid",
+            "label",
+            (
+                F.coalesce(F.col("m"), F.lit(0.0)) + F.coalesce(F.col("s"), F.lit(0.0))
+            ).alias("score"),
+        )
+
+    f = iterate(
+        "label_spreading", y.select("vid", "label", F.col("s").alias("score")),
+        step, DataFrame.count, rounds=rounds,
+    ).state
     ranked = f.select(
         "vid", "label", F.round("score", round_to).alias("score")
     )

@@ -24,9 +24,9 @@ Scale shape:
     a window sort); the matched test is two hash joins against the
     ≤|V|-row argmin table; removal is two left-anti joins;
   * the alive table is referenced 4x per round, so — like louvain and
-    k-truss — the lazily-checkpointed leaf's originStats would grow
-    geometrically; the alive set round-trips scc.py's parquet scratch
-    store every SEVER_EVERY rounds to keep planning cost flat.
+    k-truss — the checkpointed leaf's originStats would grow
+    geometrically; the round loop runs with loop.iterate's `sever` to
+    keep planning cost flat.
 
 rounds=R runs exactly R unrolled rounds (the DuckDB oracle mirrors the
 same R rounds bit-for-bit — a well-defined matching prefix, possibly
@@ -39,8 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.algos.scc import SEVER_EVERY, _Store
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iterate
 
 
 def _edge_prio(u_col, v_col):
@@ -60,68 +60,43 @@ def maximal_matching(
     if not graph.symmetric:
         raise ValueError("maximal_matching needs a symmetric graph")
     spark = graph.spark
-    alive = (
-        graph.edges.where(F.col("src") < F.col("dst"))
-        .select(
-            F.col("src").alias("u"),
-            F.col("dst").alias("v"),
-            _edge_prio(F.col("src"), F.col("dst")).alias("p"),
-        )
-        .localCheckpoint(eager=True)
+    alive = graph.edges.where(F.col("src") < F.col("dst")).select(
+        F.col("src").alias("u"),
+        F.col("dst").alias("v"),
+        _edge_prio(F.col("src"), F.col("dst")).alias("p"),
     )
-    n_alive = alive.count()
     matched_parts: list[DataFrame] = []
-    prev = None
-    budget = rounds if rounds is not None else max_rounds
 
-    store = _Store(spark)
-    try:
-        with iteration_plan(spark):
-            for r in range(1, budget + 1):
-                if n_alive == 0:
-                    break
-                ekey = F.struct(F.col("p"), F.col("u"), F.col("v"))
-                both = alive.select(F.col("u").alias("vid"), ekey.alias("k")).unionByName(
-                    alive.select(F.col("v").alias("vid"), ekey.alias("k"))
-                )
-                mn = both.groupBy("vid").agg(F.min("k").alias("mn"))
-                m = (
-                    alive.withColumn("k", ekey)
-                    .join(
-                        mn.select(F.col("vid").alias("u"), F.col("mn").alias("mu")), "u"
-                    )
-                    .join(
-                        mn.select(F.col("vid").alias("v"), F.col("mn").alias("mv")), "v"
-                    )
-                    .where((F.col("k") == F.col("mu")) & (F.col("k") == F.col("mv")))
-                    .select("u", "v")
-                    .localCheckpoint(eager=True)
-                )
-                matched_parts.append(m.select("u", "v", F.lit(r).alias("matched_round")))
-                mv = m.select(F.col("u").alias("vid")).unionByName(
-                    m.select(F.col("v").alias("vid"))
-                )
-                nxt = (
-                    alive.join(mv.withColumnRenamed("vid", "u"), "u", "left_anti")
-                    .join(mv.withColumnRenamed("vid", "v"), "v", "left_anti")
-                    .select("u", "v", "p")
-                )
-                if r % SEVER_EVERY == 0:
-                    # reset the leaf statistic to the real file size — the
-                    # 4-refs-per-round originStats pathology (module doc)
-                    nxt = store.sever(nxt)
-                else:
-                    nxt = nxt.localCheckpoint(eager=False)
-                n_alive = nxt.count()
-                if prev is not None:
-                    try:
-                        prev.unpersist()
-                    except Exception:
-                        pass
-                prev = alive
-                alive = nxt
-    finally:
-        store.cleanup()
+    def step(alive: DataFrame, r: int, _last) -> DataFrame:
+        ekey = F.struct(F.col("p"), F.col("u"), F.col("v"))
+        both = alive.select(F.col("u").alias("vid"), ekey.alias("k")).unionByName(
+            alive.select(F.col("v").alias("vid"), ekey.alias("k"))
+        )
+        mn = both.groupBy("vid").agg(F.min("k").alias("mn"))
+        # the round's matched edges outlive the loop state: pinned here
+        m = (
+            alive.withColumn("k", ekey)
+            .join(mn.select(F.col("vid").alias("u"), F.col("mn").alias("mu")), "u")
+            .join(mn.select(F.col("vid").alias("v"), F.col("mn").alias("mv")), "v")
+            .where((F.col("k") == F.col("mu")) & (F.col("k") == F.col("mv")))
+            .select("u", "v")
+            .localCheckpoint(eager=True)
+        )
+        matched_parts.append(m.select("u", "v", F.lit(r).alias("matched_round")))
+        mv = m.select(F.col("u").alias("vid")).unionByName(
+            m.select(F.col("v").alias("vid"))
+        )
+        return (
+            alive.join(mv.withColumnRenamed("vid", "u"), "u", "left_anti")
+            .join(mv.withColumnRenamed("vid", "v"), "v", "left_anti")
+            .select("u", "v", "p")
+        )
+
+    n_alive = iterate(
+        "matching", alive, step, DataFrame.count,
+        rounds=rounds if rounds is not None else max_rounds, probe_seed=True,
+        converged=lambda n_alive, _: n_alive == 0, sever=True,
+    ).value
     if n_alive > 0 and rounds is None:
         import warnings
 

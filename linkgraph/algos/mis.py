@@ -38,7 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iterate
 
 
 def _prio(round_no: int, vid_col):
@@ -60,51 +61,39 @@ def maximal_independent_set(
     if not graph.symmetric:
         raise ValueError("maximal_independent_set needs a symmetric graph")
     spark = graph.spark
-    und = graph.vertices().select("vid").localCheckpoint(eager=True)
-    n_und = und.count()
     mis_parts: list[DataFrame] = []
-    prev = None
 
-    budget = rounds if rounds is not None else max_rounds
-    with iteration_plan(spark):
-        for r in range(1, budget + 1):
-            if n_und == 0:
-                break
-            p = und.select("vid", _prio(r, F.col("vid")).alias("p"))
-            # min undecided-neighbor prio, per vertex: expand from every
-            # undecided vertex (msgs keyed by src), MIN-aggregate on dst.
-            msgs = p.select(F.col("vid").alias("src"), "p")
-            nbrmin = (
-                graph.expand(msgs, est_rows=n_und)
-                .groupBy("dst")
-                .agg(F.min("p").alias("mn"))
-            )
-            w = (
-                p.join(nbrmin, p["vid"] == nbrmin["dst"], "left")
-                .where(F.col("mn").isNull() | (F.col("p") < F.col("mn")))
-                .select(p["vid"])
-                .localCheckpoint(eager=True)
-            )
-            mis_parts.append(w.select("vid", F.lit(r).alias("joined_round")))
-            # drop winners and their whole neighborhood from U
-            excl = (
-                graph.expand(w.select(F.col("vid").alias("src")), est_rows=n_und)
-                .select(F.col("dst").alias("vid"))
-                .distinct()
-            )
-            nxt = (
-                und.join(w, "vid", "left_anti")
-                .join(excl, "vid", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            n_und = nxt.count()
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev = und
-            und = nxt
+    def step(und: DataFrame, r: int, n_und: int) -> DataFrame:
+        p = und.select("vid", _prio(r, F.col("vid")).alias("p"))
+        # min undecided-neighbor prio, per vertex: expand from every
+        # undecided vertex (msgs keyed by src), MIN-aggregate on dst.
+        msgs = p.select(F.col("vid").alias("src"), "p")
+        nbrmin = (
+            graph.expand(msgs, est_rows=n_und)
+            .groupBy("dst")
+            .agg(F.min("p").alias("mn"))
+        )
+        # the round's winners outlive the loop state: pinned here
+        w = (
+            p.join(nbrmin, p["vid"] == nbrmin["dst"], "left")
+            .where(F.col("mn").isNull() | (F.col("p") < F.col("mn")))
+            .select(p["vid"])
+            .localCheckpoint(eager=True)
+        )
+        mis_parts.append(w.select("vid", F.lit(r).alias("joined_round")))
+        # drop winners and their whole neighborhood from U
+        excl = (
+            graph.expand(w.select(F.col("vid").alias("src")), est_rows=n_und)
+            .select(F.col("dst").alias("vid"))
+            .distinct()
+        )
+        return und.join(w, "vid", "left_anti").join(excl, "vid", "left_anti")
+
+    n_und = iterate(
+        "mis", graph.vertices().select("vid"), step, DataFrame.count,
+        rounds=rounds if rounds is not None else max_rounds, probe_seed=True,
+        converged=lambda n_und, _: n_und == 0, eager=True,
+    ).value
     if n_und > 0 and rounds is None:
         import warnings
 

@@ -40,7 +40,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.loop import broadcast_fits, iterate, iteration_plan
 
 
 def minimum_spanning_forest(
@@ -75,8 +75,6 @@ def minimum_spanning_forest(
         .localCheckpoint(eager=True)
     )
     n_vertices = comp.count()
-    from linkgraph.graph import broadcast_threshold
-
     # byte-gated label broadcast (LinkGraph.expand's J1 rule): the comp
     # table is ≤|V| rows of two longs and SHRINKS every round; when its
     # estimated bytes clear autoBroadcastJoinThreshold, broadcasting both
@@ -84,9 +82,7 @@ def minimum_spanning_forest(
     # (measured: the dst-side label join otherwise re-exchanges all |E|
     # rows by dst every round).  Past the gate (10^9-vertex graphs) it
     # falls back to the plain shuffle join exactly like expand.
-    bc_ok = 0 < broadcast_threshold(spark) and (
-        n_vertices * (16 + 12 * 2) < broadcast_threshold(spark)
-    )
+    bc_ok = broadcast_fits(spark, n_vertices, 2)
     forest_parts: list[DataFrame] = []
     n_rounds = rounds if rounds is not None else max_rounds
     converged = False
@@ -177,39 +173,26 @@ def _contract_pseudoforest(
     back = f.select(F.col("csrc").alias("b"), F.col("cdst").alias("bt"))
     if bc_small:
         back = F.broadcast(back)
-    p = (
-        f.join(
-            back, (f.cdst == back.b) & (F.col("bt") == f.csrc), "left"
-        )
-        .select(
-            F.col("csrc").alias("c"),
-            F.when(
-                F.col("b").isNotNull() & (F.col("csrc") < F.col("cdst")),
-                F.col("csrc"),
-            )
-            .otherwise(F.col("cdst"))
-            .alias("p"),
-        )
-        .localCheckpoint(eager=True)
+    p = f.join(back, (f.cdst == back.b) & (F.col("bt") == f.csrc), "left").select(
+        F.col("csrc").alias("c"),
+        F.when(F.col("b").isNotNull() & (F.col("csrc") < F.col("cdst")), F.col("csrc"))
+        .otherwise(F.col("cdst"))
+        .alias("p"),
     )
-    for _ in range(max_jumps):
+
+    def jump(p: DataFrame, _r: int, _last) -> DataFrame:
         hop = p.select(F.col("c").alias("q"), F.col("p").alias("gp"))
         if bc_small:
             hop = F.broadcast(hop)
-        np_ = (
-            p.join(hop, p.p == hop.q, "left")
-            .select("c", F.coalesce(F.col("gp"), F.col("p")).alias("np"), "p")
-            .localCheckpoint(eager=False)
+        return p.join(hop, p.p == hop.q, "left").select(
+            "c", F.coalesce(F.col("gp"), F.col("p")).alias("p"), F.col("p").alias("pp")
         )
-        changed = np_.where(F.col("np") != F.col("p")).count()
-        nxt = np_.select("c", F.col("np").alias("p"))
-        try:
-            p.unpersist()
-        except Exception:
-            pass
-        p = nxt
-        if changed == 0:
-            break
+
+    p = iterate(
+        "mst_jump", p, jump,
+        lambda p: p.where(F.col("p") != F.col("pp")).count(),
+        rounds=max_jumps, converged=lambda changed, _: changed == 0,
+    ).state
     return p.select(F.col("c").alias("comp"), F.col("p").alias("nc"))
 
 

@@ -8,21 +8,16 @@ Scale-shaped iteration (one heavy Spark job per iteration):
   when the estimated byte size clears autoBroadcastJoinThreshold, salted
   or plain shuffle join otherwise (never an unconditional |V|-row
   broadcast: at 10^9 vertices that OOMs every executor);
-* the loop runs under `iteration_plan` (AQE off, shuffled-hash preferred):
-  the per-iteration plan is static and co-partitioned, so AQE's per-stage
-  driver rounds are pure overhead and SHJ avoids SMJ's per-iteration sort;
 * Δrank and the dangling mass for the NEXT iteration are folded into one
-  aggregate over the freshly checkpointed state — no separate join or
-  anti-join action per iteration.  The dangling vertex set is static
-  (deg == 0), so its mass at iteration t is just sum(pr_t) over it;
+  aggregate over the freshly checkpointed state (the round's probe) — no
+  separate join or anti-join action per iteration.  The dangling vertex
+  set is static (deg == 0), so its mass at iteration t is just sum(pr_t)
+  over it;
 * n counts ALL vertices including sink-only ones (graph.num_vertices()
   uses vertices() on directed tables), so ranks sum to 1 with sinks.
 
-Convergence: max |Δrank| < tol (BASELINE tol 1e-6).  Lineage cut every
-iteration via lazy localCheckpoint whose materializing action IS the stats
-aggregate — one fused Spark job per iteration (safe because the loop runs
-AQE-off; the round-1 lazy-truncation flakiness was AQE-specific); durable
-snapshots via CheckpointManager.
+Convergence: max |Δrank| < tol (BASELINE tol 1e-6).  The round skeleton
+(checkpoint, release, snapshots) is linkgraph.loop.iterate.
 """
 
 from __future__ import annotations
@@ -31,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
+from linkgraph.loop import Snapshots, iterate
 
 
 def pagerank(
@@ -41,7 +37,6 @@ def pagerank(
     checkpoint_mgr=None,
     snapshot_every: int = 10,
     resume: bool = False,
-    verbose: bool = False,
     sources: list[int] | None = None,
     weight_col: str | None = None,
     init: DataFrame | None = None,
@@ -76,7 +71,6 @@ def pagerank(
     unweighted path — same expand, same single fused job per iteration —
     only the seed aggregate (sum(w) instead of count) and the
     contribution term (w·msg instead of msg) change."""
-    spark = graph.spark
     n = graph.num_vertices()
     personalized = sources is not None
     if personalized and not sources:
@@ -85,15 +79,15 @@ def pagerank(
         # the personalized branch seeds pr from the reset vector itself
         raise ValueError("init warm start is not supported with sources=")
 
-    it0 = 0
-    state = None
-    dangling_mass = None
-    if resume and checkpoint_mgr is not None:
-        snap = checkpoint_mgr.latest()
-        if snap is not None:
-            state = checkpoint_mgr.read_state(snap)
-            it0 = int(snap["metrics"]["iteration"])
-            dangling_mass = float(snap["metrics"].get("dangling_mass", 0.0))
+    snapshots = None
+    state, it0, metrics = None, 0, {}
+    if checkpoint_mgr is not None:
+        snapshots = Snapshots(
+            checkpoint_mgr, snapshot_every,
+            ["vid", "deg", *(["rv"] if personalized else []), "pr"],
+        )
+        if resume:
+            state, it0, metrics = snapshots.resume()
 
     if weight_col is None:
         degt = graph.degrees()
@@ -155,101 +149,75 @@ def pagerank(
             F.lit(1.0 / len(sources)),
         ).otherwise(F.lit(0.0))
         state = state.select("vid", "deg", rv.alias("rv"), "pr")
-    state = state.localCheckpoint(eager=True)
-    if dangling_mass is None:
-        if graph.symmetric:
+
+    def step(st: DataFrame, _r: int, last: dict) -> DataFrame:
+        if "dangling_mass" in last:
+            dangling_mass = last["dangling_mass"]
+        elif graph.symmetric:
             dangling_mass = 0.0  # every vertex has out-edges by construction
         else:
             dangling_mass = (
-                state.where(F.col("deg") == 0).agg(F.sum("pr").alias("m")).first()["m"]
+                st.where(F.col("deg") == 0).agg(F.sum("pr").alias("m")).first()["m"]
                 or 0.0
             )
+        # message alias "m" never clashes with an edge weight column
+        msgs = st.where(F.col("deg") > 0).select(
+            F.col("vid").alias("src"), (F.col("pr") / F.col("deg")).alias("m")
+        )
+        contrib = (
+            F.sum("m")
+            if weight_col is None
+            else F.sum(F.col(weight_col) * F.col("m"))
+        )
+        contribs = graph.expand(msgs, est_rows=n).groupBy("dst").agg(
+            contrib.alias("acc")
+        )
+        # NOTE (r6): a byte-gated broadcast of contribs for the state
+        # join was A/B'd and measured ~10% SLOWER warm (4.6 s vs 4.1 s
+        # for pagerank10 at sf0.1/local[32]) — the join only moves two
+        # ≤|V|-row narrow tables, and the per-iteration broadcast
+        # build costs more than the two small exchanges it replaces.
+        # Kept as the shuffle join deliberately.
+        if personalized:
+            # teleport AND dangling mass both return to the seed set
+            base_col = (
+                F.lit(1.0 - damping) + F.lit(damping * dangling_mass)
+            ) * F.col("st.rv")
+            keep = [F.col("st.rv").alias("rv")]
+        else:
+            base_col = F.lit((1.0 - damping) / n + damping * dangling_mass / n)
+            keep = []
+        return (
+            st.alias("st")
+            .join(contribs.alias("cb"), F.col("st.vid") == F.col("cb.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.col("st.deg").alias("deg"),
+                *keep,
+                (
+                    base_col
+                    + F.lit(damping) * F.coalesce(F.col("cb.acc"), F.lit(0.0))
+                ).alias("pr"),
+                F.col("st.pr").alias("pr_old"),
+            )
+        )
 
-    prev = None
-    delta = None
-    from linkgraph.graph import iteration_plan
+    def probe(st: DataFrame) -> dict:
+        # delta + next iteration's dangling mass (sum of new pr over the
+        # static deg==0 set)
+        row = st.agg(
+            F.max(F.abs(F.col("pr") - F.col("pr_old"))).alias("delta"),
+            F.sum(F.when(F.col("deg") == 0, F.col("pr"))).alias("dm"),
+        ).first()
+        return {"delta": float(row["delta"]), "dangling_mass": float(row["dm"] or 0.0)}
 
-    with iteration_plan(spark):
-        for it in range(it0, max_iter):
-            # message alias "m" never clashes with an edge weight column
-            msgs = state.where(F.col("deg") > 0).select(
-                F.col("vid").alias("src"), (F.col("pr") / F.col("deg")).alias("m")
-            )
-            contrib = (
-                F.sum("m")
-                if weight_col is None
-                else F.sum(F.col(weight_col) * F.col("m"))
-            )
-            contribs = graph.expand(msgs, est_rows=n).groupBy("dst").agg(
-                contrib.alias("acc")
-            )
-            # NOTE (r6): a byte-gated broadcast of contribs for the state
-            # join was A/B'd and measured ~10% SLOWER warm (4.6 s vs 4.1 s
-            # for pagerank10 at sf0.1/local[32]) — the join only moves two
-            # ≤|V|-row narrow tables, and the per-iteration broadcast
-            # build costs more than the two small exchanges it replaces.
-            # Kept as the shuffle join deliberately.
-            if personalized:
-                # teleport AND dangling mass both return to the seed set
-                base_col = (
-                    F.lit(1.0 - damping) + F.lit(damping * dangling_mass)
-                ) * F.col("st.rv")
-                keep = [F.col("st.rv").alias("rv")]
-            else:
-                base_col = F.lit((1.0 - damping) / n + damping * dangling_mass / n)
-                keep = []
-            new_state = (
-                state.alias("st")
-                .join(contribs.alias("cb"), F.col("st.vid") == F.col("cb.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.col("st.deg").alias("deg"),
-                    *keep,
-                    (
-                        base_col
-                        + F.lit(damping) * F.coalesce(F.col("cb.acc"), F.lit(0.0))
-                    ).alias("pr"),
-                    F.col("st.pr").alias("pr_old"),
-                )
-                # LAZY checkpoint, materialized by the stats aggregate just
-                # below: expand + update + stats fuse into ONE Spark job per
-                # iteration (the MS-BFS round-3 shape).  The plan is
-                # truncated at the call either way; the round-1 lazy
-                # pathology (plan-build 2s -> 219s by iteration 9) was
-                # AQE-specific, and this loop runs under iteration_plan with
-                # AQE off, where truncation is deterministic (lineage
-                # boundedness asserted in tests).
-                .localCheckpoint(eager=False)
-            )
-            # stats job over the cached state: delta + next iteration's
-            # dangling mass (sum of new pr over the static deg==0 set)
-            stats = new_state.agg(
-                F.max(F.abs(F.col("pr") - F.col("pr_old"))).alias("delta"),
-                F.sum(F.when(F.col("deg") == 0, F.col("pr"))).alias("dm"),
-            ).first()
-            delta = float(stats["delta"])
-            dangling_mass = float(stats["dm"] or 0.0)
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, state = state, new_state
-            if verbose:
-                print(f"[pagerank] iter {it}: delta={delta}", flush=True)
-            if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
-                state = checkpoint_mgr.write_state(
-                    state.select("vid", "deg", *(["rv"] if personalized else []), "pr"),
-                    it + 1,
-                    {
-                        "iteration": it + 1,
-                        "delta": delta,
-                        "dangling_mass": dangling_mass,
-                    },
-                ).localCheckpoint(eager=True)
-            if tol > 0 and delta < tol:
-                break
-    return state.select("vid", "pr")
+    run = iterate(
+        "pagerank", state, step, probe,
+        rounds=max_iter, start=it0, last=metrics,
+        converged=lambda v, _: tol > 0 and v["delta"] < tol,
+        snapshots=snapshots,
+    )
+    return run.state.select("vid", "pr")
 
 
 def ppr_forward_push(
@@ -287,7 +255,6 @@ def ppr_forward_push(
     """
     if not seeds:
         raise ValueError("ppr_forward_push needs a non-empty seed list")
-    spark = graph.spark
     deg = graph.degrees().select("vid", F.col("deg").cast("double").alias("deg"))
     seed_lit = F.col("vid").isin([int(s) for s in seeds])
     state = (
@@ -299,57 +266,54 @@ def ppr_forward_push(
             F.lit(0.0).alias("p"),
             F.when(seed_lit, F.lit(1.0 / len(seeds))).otherwise(0.0).alias("r"),
         )
-        .localCheckpoint(eager=True)
     )
-    budget = rounds if rounds is not None else max_rounds
-    from linkgraph.graph import iteration_plan
+    pushed = F.col("r") > F.lit(eps) * F.col("deg")
 
-    exhausted = rounds is None
-    prev_state = None
-    with iteration_plan(spark):
-        for _ in range(budget):
-            pushed = F.col("r") > F.lit(eps) * F.col("deg")
-            msgs = state.where(pushed & (F.col("deg") > 0)).select(
-                F.col("vid").alias("src"),
-                ((1.0 - alpha) * F.col("r") / F.col("deg")).alias("w"),
+    def push_count(st: DataFrame) -> int:
+        return st.where(pushed & (F.col("deg") > 0)).count()
+
+    def step(st: DataFrame, _r: int, n_push: int | None) -> DataFrame:
+        msgs = st.where(pushed & (F.col("deg") > 0)).select(
+            F.col("vid").alias("src"),
+            ((1.0 - alpha) * F.col("r") / F.col("deg")).alias("w"),
+        )
+        # fixed-rounds mode measures no frontier, but it is bounded by
+        # |V| — feed that bound to the J1 byte gate so small-state pushes
+        # broadcast instead of falling through to the shuffle join
+        contrib = graph.expand(
+            msgs, est_rows=n_push if n_push is not None else graph.num_vertices()
+        )
+        inc = contrib.groupBy("dst").agg(F.sum("w").alias("c"))
+        return (
+            st.alias("st")
+            .join(inc.alias("ic"), F.col("st.vid") == F.col("ic.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.col("st.deg").alias("deg"),
+                (
+                    F.col("st.p")
+                    + F.when(pushed, alpha * F.col("st.r")).otherwise(0.0)
+                ).alias("p"),
+                (
+                    F.when(pushed, 0.0).otherwise(F.col("st.r"))
+                    + F.coalesce(F.col("ic.c"), F.lit(0.0))
+                ).alias("r"),
             )
-            if rounds is None:
-                n_push = msgs.count()
-                if n_push == 0:
-                    exhausted = False
-                    break
-                contrib = graph.expand(msgs, est_rows=n_push)
-            else:
-                # fixed-rounds mode has no count action to measure the
-                # frontier, but it is bounded by |V| — feed that bound to
-                # the J1 byte gate so small-state pushes broadcast instead
-                # of falling through to the shuffle join (the gate still
-                # degrades to shuffle past the threshold at scale)
-                contrib = graph.expand(msgs, est_rows=graph.num_vertices())
-            inc = contrib.groupBy("dst").agg(F.sum("w").alias("c"))
-            prev_state = state
-            state = (
-                state.alias("st")
-                .join(inc.alias("ic"), F.col("st.vid") == F.col("ic.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.col("st.deg").alias("deg"),
-                    (
-                        F.col("st.p")
-                        + F.when(pushed, alpha * F.col("st.r")).otherwise(0.0)
-                    ).alias("p"),
-                    (
-                        F.when(pushed, 0.0).otherwise(F.col("st.r"))
-                        + F.coalesce(F.col("ic.c"), F.lit(0.0))
-                    ).alias("r"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            if prev_state is not None:
-                try:
-                    prev_state.unpersist()
-                except Exception:
-                    pass
+        )
+
+    if rounds is not None:
+        run = iterate("ppr_push", state, step, rounds=rounds, eager=True)
+        exhausted = False
+    else:
+        # the push count of the state a sweep starts from is the previous
+        # sweep's probe; the seed's is counted here
+        n0 = push_count(state)
+        run = iterate(
+            "ppr_push", state, step, push_count,
+            rounds=max_rounds if n0 else 0, last=n0, eager=True,
+            converged=lambda n_push, _: n_push == 0,
+        )
+        exhausted = not run.converged and n0 > 0
     if exhausted:
         import warnings
 
@@ -358,4 +322,4 @@ def ppr_forward_push(
             "eps threshold — estimates are lower bounds",
             stacklevel=2,
         )
-    return state.select("vid", "p", "r")
+    return run.state.select("vid", "p", "r")

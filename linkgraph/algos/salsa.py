@@ -20,9 +20,8 @@ Plan shape: the forward half-step flows hub/outdeg through the
 src-partitioned edge table via LinkGraph.expand; the backward half-step
 uses a transpose LinkGraph built once (the CSR/CSC pairing hits.py
 documents).  Degree divisions ride the score table as a projection —
-degree tables are joined once up front, never per round.  Runs under
-iteration_plan (AQE off, shuffled-hash) like every iterative kernel
-here.  Rounded to `round_to` for cross-engine comparison.
+degree tables are joined once up front, never per round.  Rounded to
+`round_to` for cross-engine comparison.
 """
 
 from __future__ import annotations
@@ -30,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iterate
 
 
 def salsa(
@@ -64,15 +64,13 @@ def salsa(
     if n_hub == 0:
         return spark.createDataFrame([], "vid long, hub double, auth double")
 
-    # hub mass 1/n_hub on every vertex with an out-edge
-    h = verts.select(
-        "vid",
-        F.when(F.col("od") > 0, F.lit(1.0 / n_hub)).otherwise(F.lit(0.0)).alias("x"),
-    )
+    n = verts.count()
 
-    def flow(g: LinkGraph, scores: DataFrame, deg_col: str, est: int) -> DataFrame:
-        """Flow scores/deg along g's edges, sum per destination; keep
-        explicit zero rows so the off-walk side stays reportable."""
+    def flow(scores: DataFrame, r: int, _last) -> DataFrame:
+        """Flow scores/deg along the edges — odd r: auth, forward,
+        /outdeg; even r: hub, transpose, /indeg — summed per destination;
+        keep explicit zero rows so the off-walk side stays reportable."""
+        g, deg_col = (graph, "od") if r % 2 else (gt, "idg")
         msgs = (
             scores.join(verts.select("vid", deg_col), "vid")
             .where(F.col(deg_col) > 0)
@@ -81,7 +79,7 @@ def salsa(
                 (F.col("x") / F.col(deg_col)).alias("x"),
             )
         )
-        raw = g.expand(msgs, est_rows=est).groupBy("dst").agg(F.sum("x").alias("acc"))
+        raw = g.expand(msgs, est_rows=n).groupBy("dst").agg(F.sum("x").alias("acc"))
         return (
             verts.alias("v")
             .join(raw.alias("r"), F.col("v.vid") == F.col("r.dst"), "left")
@@ -89,22 +87,14 @@ def salsa(
                 F.col("v.vid").alias("vid"),
                 F.coalesce(F.col("r.acc"), F.lit(0.0)).alias("x"),
             )
-            .localCheckpoint(eager=True)
         )
 
-    n = verts.count()
-    retained: list[DataFrame] = []
-    with iteration_plan(spark):
-        a = None
-        for _ in range(rounds):
-            a = flow(graph, h, "od", n)   # auth: forward, /outdeg
-            h = flow(gt, a, "idg", n)     # hub: transpose, /indeg
-            for old in retained:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-            retained = [a, h]
+    # hub mass 1/n_hub on every vertex with an out-edge
+    h0 = verts.select(
+        "vid",
+        F.when(F.col("od") > 0, F.lit(1.0 / n_hub)).otherwise(F.lit(0.0)).alias("x"),
+    )
+    a, h = iterate("salsa", h0, flow, rounds=2 * rounds, eager=True, keep=2).kept
 
     hub_col, auth_col = F.col("h.x"), F.col("a.x")
     if round_to is not None:

@@ -24,9 +24,8 @@ roots, which is small on any non-adversarial graph.
 
 Both propagations POINTER-DOUBLE (lbl(v) ← min(lbl(v), lbl(lbl(v))) is
 valid because lbl(v) reaches v transitively), so each converges in
-O(log longest-path) fused one-job iterations (lazy localCheckpoint
-materialized by the convergence aggregate, AQE-off shuffled-hash profile
-via iteration_plan).
+O(log longest-path) fused one-job iterations (loop.iterate, probed by
+the changed-label count).
 
 Stat severance: doubling references the state THREE times per iteration
 (message join, outer join, doubling mapping), and `localCheckpoint`
@@ -34,61 +33,23 @@ copies the PRE-cache-substitution plan's statistics into each new leaf,
 so the sizeInBytes digit count grows ×3 per iteration (the general rule:
 ×k for k state references — ktruss.py documents the k=4 case) until
 Catalyst spends its time multiplying huge BigInts.  The LP therefore
-round-trips its label table through the FS store every SEVER_EVERY
+runs with loop.iterate's `sever`, a parquet round-trip every SEVER_EVERY
 iterations: ×3^6 ≈ 7×10^2 digit cap keeps every stats product trivial
 while amortizing the parquet write to ~1-2 per propagation at any scale.
 """
 
 from __future__ import annotations
 
-import posixpath
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import edge_store_root, iteration_plan
+from linkgraph.loop import Store, iterate, iteration_plan
 
-SEVER_EVERY = 6  # stat digits cap at ~3^6 x seed before each FS reset
-
-
-class _Store:
-    """Per-call scratch dir for stat-severing parquet round-trips; the
-    whole dir is deleted at the end (everything returned is eager-
-    localCheckpointed first, so nothing reads it afterwards)."""
-
-    def __init__(self, spark):
-        self.spark = spark
-        self.root = posixpath.join(
-            edge_store_root(spark), f"linkgraph_scc_{uuid.uuid4().hex}"
-        )
-        self.n = 0
-
-    def sever(self, df: DataFrame) -> DataFrame:
-        self.n += 1
-        p = posixpath.join(self.root, f"s{self.n}")
-        df.write.parquet(p)
-        return self.spark.read.parquet(p)
-
-    def cleanup(self):
-        try:
-            from linkgraph.checkpoint import _HadoopFS
-
-            fs = _HadoopFS(self.spark, self.root)
-            if fs.exists(self.root):
-                fs.delete(self.root)
-        except Exception:
-            pass
-
-
-def _min_label_reach(
-    edges: DataFrame, init: DataFrame, max_iter: int, store: _Store
-) -> DataFrame:
+def _min_label_reach(edges: DataFrame, init: DataFrame, max_iter: int) -> DataFrame:
     """(vid, lbl): lbl = min vid with a directed path TO vid (incl. vid).
     init: (vid, lbl) starting labels (vid, vid).  Pointer-doubled."""
-    lbl = init
-    prev = None
-    for it in range(max_iter):
+
+    def step(lbl: DataFrame, _r: int, _last) -> DataFrame:
         msgs = (
             lbl.join(edges, lbl["vid"] == edges["src"])
             .groupBy(F.col("dst").alias("vid"))
@@ -102,33 +63,25 @@ def _min_label_reach(
         # pointer doubling: lbl(v) <- min(lbl(v), lbl(lbl(v))) — valid
         # because lbl(v) reaches v, so anything reaching lbl(v) reaches v
         mapping = lbl.select(F.col("vid").alias("lbl"), F.col("lbl").alias("ll"))
-        new = (
-            stepped.join(mapping, "lbl", "left")
-            .select(
-                "vid",
-                F.least(F.col("lbl"), F.coalesce(F.col("ll"), F.col("lbl"))).alias("lbl"),
-                "pl",
-            )
-            .localCheckpoint(eager=False)
+        return stepped.join(mapping, "lbl", "left").select(
+            "vid",
+            F.least(F.col("lbl"), F.coalesce(F.col("ll"), F.col("lbl"))).alias("lbl"),
+            "pl",
         )
-        changed = int(
-            new.agg(
+
+    def changed(lbl: DataFrame) -> int:
+        return int(
+            lbl.agg(
                 F.sum(F.when(F.col("lbl") != F.col("pl"), 1).otherwise(0)).alias("n")
             ).first()["n"]
             or 0
         )
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
-        prev, lbl = lbl, new.select("vid", "lbl")
-        if changed == 0:
-            break
-        if (it + 1) % SEVER_EVERY == 0:
-            lbl = store.sever(lbl)  # reset originStats digits (module doc)
-            prev = None
-    else:
+
+    run = iterate(
+        "scc_reach", init.select("vid", "lbl"), step, changed,
+        rounds=max_iter, converged=lambda n, _: n == 0, sever=True,
+    )
+    if not run.converged:
         # max_iter exhausted before the label fixpoint: stale labels can
         # split one SCC across comp values WITHOUT leaving any vertex
         # unassigned, so the outer incomplete-result warning never fires —
@@ -137,11 +90,11 @@ def _min_label_reach(
 
         warnings.warn(
             f"_min_label_reach: max_iter={max_iter} exhausted with "
-            f"{changed} labels still changing — component labels may be "
+            f"{run.value} labels still changing — component labels may be "
             "split; raise max_iter",
             stacklevel=2,
         )
-    return lbl
+    return run.state.select("vid", "lbl")
 
 
 def _trim(e, verts, nv, store, assigned_parts, max_trim=100):
@@ -221,7 +174,7 @@ def strongly_connected_components(
         .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
-    store = _Store(spark)
+    store = Store(spark)
     nv = verts.count()
 
     # iteration tables are |V|-row; at small |V| the session's shuffle
@@ -250,7 +203,7 @@ def strongly_connected_components(
                 # d-digit originStats re-amplifies those d digits ×3 per
                 # iteration regardless of label severing, so the EDGE
                 # side must carry file-backed (small, real) stats too
-                f = store.sever(_min_label_reach(e, init, max_iter, store))
+                f = store.sever(_min_label_reach(e, init, max_iter))
 
                 # class-restricted reversed edges: both endpoints share f
                 fe = f.withColumnRenamed("vid", "src").withColumnRenamed("lbl", "fs")
@@ -261,7 +214,7 @@ def strongly_connected_components(
                     .where(F.col("fs") == F.col("fd"))
                     .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
                 )
-                br = _min_label_reach(rev_class, init, max_iter, store)
+                br = _min_label_reach(rev_class, init, max_iter)
 
                 joined = f.join(br.withColumnRenamed("lbl", "br"), "vid")
                 # `done` escapes this function (and outlives
@@ -403,7 +356,6 @@ def condensation_layers(
     identical even if not yet converged); rounds=None runs to fixpoint and
     WARNS if max_rounds is exhausted first (scc.py's budget discipline).
     """
-    spark = edges.sparkSession
     comp = strongly_connected_components(edges)
     e = (
         edges.select(
@@ -423,49 +375,31 @@ def condensation_layers(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    depth = (
-        comp.select(F.col("comp").alias("c"))
-        .distinct()
-        .withColumn("depth", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    budget = rounds if rounds is not None else max_rounds
-    prev_sum = 0
-    prev_depth = None
-    with iteration_plan(spark):
-        for it in range(budget):
-            msgs = ce.join(
-                depth.withColumnRenamed("c", "src"), "src"
-            ).select(
-                F.col("dst").alias("c"), (F.col("depth") + 1).alias("depth")
-            )
-            prev_depth = depth
-            depth = (
-                depth.unionByName(msgs)
-                .groupBy("c")
-                .agg(F.max("depth").alias("depth"))
-                .localCheckpoint(eager=True)
-            )
-            if prev_depth is not None:
-                try:
-                    prev_depth.unpersist()
-                except Exception:
-                    pass
-            if rounds is None:
-                s = depth.agg(F.sum("depth")).first()[0] or 0
-                if s == prev_sum:
-                    break
-                prev_sum = s
-        else:
-            if rounds is None:
-                import warnings
+    def step(depth: DataFrame, _r: int, _last) -> DataFrame:
+        msgs = ce.join(depth.withColumnRenamed("c", "src"), "src").select(
+            F.col("dst").alias("c"), (F.col("depth") + 1).alias("depth")
+        )
+        return depth.unionByName(msgs).groupBy("c").agg(F.max("depth").alias("depth"))
 
-                warnings.warn(
-                    f"condensation_layers: max_rounds={max_rounds} exhausted "
-                    "before the depth fixpoint; layers may be lower bounds",
-                    stacklevel=2,
-                )
-    return depth.select(
+    run = iterate(
+        "condensation",
+        comp.select(F.col("comp").alias("c")).distinct()
+        .withColumn("depth", F.lit(0).cast("long")),
+        step,
+        # fixed rounds: the eager checkpoint is the round's only action
+        None if rounds is not None else (lambda d: d.agg(F.sum("depth")).first()[0] or 0),
+        rounds=rounds if rounds is not None else max_rounds, last=0, eager=True,
+        converged=lambda s, prev_s: rounds is None and s == prev_s,
+    )
+    if rounds is None and not run.converged:
+        import warnings
+
+        warnings.warn(
+            f"condensation_layers: max_rounds={max_rounds} exhausted "
+            "before the depth fixpoint; layers may be lower bounds",
+            stacklevel=2,
+        )
+    return run.state.select(
         F.col("c").cast("long").alias("comp"),
         F.col("depth").cast("long").alias("depth"),
     )

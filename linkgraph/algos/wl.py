@@ -39,7 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.loop import iterate
 
 WL_P = (1 << 61) - 1  # Mersenne prime: modulus of the multiset sum
 
@@ -49,55 +50,52 @@ def _hnum(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("decimal(38,0)")
 
 
+def _recolor(graph: LinkGraph):
+    """The WL round: color'(v) = md5(color(v) | Σ H(color(u)) mod P)."""
+    n = graph.num_vertices()
+
+    def step(color: DataFrame, _r: int, _last) -> DataFrame:
+        msgs = color.select(F.col("vid").alias("src"), _hnum(F.col("color")).alias("h"))
+        agg = (
+            graph.expand(msgs, est_rows=n)
+            .groupBy("dst")
+            .agg((F.sum("h") % F.lit(WL_P)).alias("s"))
+        )
+        return (
+            color.alias("st")
+            .join(agg.alias("nb"), F.col("st.vid") == F.col("nb.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.md5(
+                    F.concat_ws(
+                        "|",
+                        F.col("st.color"),
+                        F.coalesce(
+                            F.col("nb.s").cast("decimal(38,0)"),
+                            F.lit(0).cast("decimal(38,0)"),
+                        ).cast("string"),
+                    )
+                ).alias("color"),
+            )
+        )
+
+    return step
+
+
+def _degree_colors(graph: LinkGraph) -> DataFrame:
+    return graph.degrees().select("vid", F.col("deg").cast("string").alias("color"))
+
+
 def wl_refine(graph: LinkGraph, rounds: int = 3) -> DataFrame:
     """Returns (vid, color) after `rounds` of hash-based 1-WL
     refinement; color is a 32-hex md5 string (round-0 colors = degree
     strings)."""
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
-    spark = graph.spark
-    n = graph.num_vertices()
-    color = (
-        graph.degrees()
-        .select("vid", F.col("deg").cast("string").alias("color"))
-        .localCheckpoint(eager=True)
-    )
-    prev = None
-    with iteration_plan(spark):
-        for _ in range(rounds):
-            msgs = color.select(
-                F.col("vid").alias("src"), _hnum(F.col("color")).alias("h")
-            )
-            agg = (
-                graph.expand(msgs, est_rows=n)
-                .groupBy("dst")
-                .agg((F.sum("h") % F.lit(WL_P)).alias("s"))
-            )
-            new = (
-                color.alias("st")
-                .join(agg.alias("nb"), F.col("st.vid") == F.col("nb.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.col("st.color"),
-                            F.coalesce(
-                                F.col("nb.s").cast("decimal(38,0)"),
-                                F.lit(0).cast("decimal(38,0)"),
-                            ).cast("string"),
-                        )
-                    ).alias("color"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            new.count()
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, color = color, new
+    color = iterate(
+        "wl_refine", _degree_colors(graph), _recolor(graph),
+        DataFrame.count, rounds=rounds,
+    ).state
     return color.select(F.col("vid").cast("long").alias("vid"), "color")
 
 
@@ -125,19 +123,20 @@ def wl_anonymity(graph: LinkGraph, rounds: int = 3, round_to: int = 6) -> DataFr
     Runs ONE refinement chain (the wl_refine iteration, checkpointed
     state) and takes a \\|classes\\|-row stats aggregate per round from
     the same table the next round consumes — no from-scratch recompute
-    per round; the per-round stats land as bounded 1-row collects (the
-    graph_stats scalar convention) so unpersist of superseded state
-    stays safe.
+    per round; that aggregate is the round's probe, and the per-round
+    stats land as bounded 1-row collects (the graph_stats scalar
+    convention).
     """
     spark = graph.spark
-    n = graph.num_vertices()
+    rows: list = []
 
-    def stats(c: DataFrame, r: int):
+    def stats(c: DataFrame):
+        """The round's class-size row; its aggregate reads every partition."""
         sizes = c.groupBy("color").agg(F.count(F.lit(1)).alias("n"))
         uniq = F.sum(F.when(F.col("n") == 1, 1).otherwise(0))
-        return (
+        rows.append(
             sizes.agg(
-                F.lit(r).cast("int").alias("round"),
+                F.lit(len(rows)).cast("int").alias("round"),
                 F.count(F.lit(1)).cast("long").alias("n_classes"),
                 uniq.cast("long").alias("n_unique"),
                 F.round(uniq / F.sum("n").cast("double"), round_to).alias(
@@ -148,49 +147,10 @@ def wl_anonymity(graph: LinkGraph, rounds: int = 3, round_to: int = 6) -> DataFr
             .collect()[0]
         )
 
-    color = (
-        graph.degrees()
-        .select("vid", F.col("deg").cast("string").alias("color"))
-        .localCheckpoint(eager=True)
+    iterate(
+        "wl_anonymity", _degree_colors(graph), _recolor(graph), stats,
+        rounds=rounds, probe_seed=True,
     )
-    rows = [stats(color, 0)]
-    prev = None
-    with iteration_plan(spark):
-        for r in range(1, rounds + 1):
-            msgs = color.select(
-                F.col("vid").alias("src"), _hnum(F.col("color")).alias("h")
-            )
-            agg = (
-                graph.expand(msgs, est_rows=n)
-                .groupBy("dst")
-                .agg((F.sum("h") % F.lit(WL_P)).alias("s"))
-            )
-            new = (
-                color.alias("st")
-                .join(agg.alias("nb"), F.col("st.vid") == F.col("nb.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.col("st.color"),
-                            F.coalesce(
-                                F.col("nb.s").cast("decimal(38,0)"),
-                                F.lit(0).cast("decimal(38,0)"),
-                            ).cast("string"),
-                        )
-                    ).alias("color"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            new.count()
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, color = color, new
-            rows.append(stats(color, r))
     return spark.createDataFrame(
         rows,
         "round int, n_classes long, n_unique long, frac_unique double, max_class long",

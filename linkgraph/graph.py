@@ -16,30 +16,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-
-_SIZE_SUFFIX = {
-    "b": 1,
-    "k": 1 << 10, "kb": 1 << 10,
-    "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30,
-    "t": 1 << 40, "tb": 1 << 40,
-}
-
-
-def parse_bytes(size: str | int) -> int:
-    """Parse Spark byte-size conf strings ('10485760b', '32MB', '10m', '-1')."""
-    if isinstance(size, int):
-        return size
-    s = str(size).strip().lower()
-    for suf in sorted(_SIZE_SUFFIX, key=len, reverse=True):
-        if s.endswith(suf):
-            return int(float(s[: -len(suf)]) * _SIZE_SUFFIX[suf])
-    return int(s)
-
-
-def broadcast_threshold(spark) -> int:
-    """Session autoBroadcastJoinThreshold in bytes (-1 = disabled)."""
-    return parse_bytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m"))
+# parse_bytes and iteration_plan are re-exported for msbfs.py, which
+# imports them from here
+from linkgraph.loop import (  # noqa: F401
+    broadcast_fits,
+    broadcast_threshold,
+    iteration_plan,
+    parse_bytes,
+)
 
 
 def edge_store_root(spark) -> str:
@@ -140,57 +124,6 @@ def relabel_pairs(
         .join(v.withColumnRenamed("name", dst_col).withColumnRenamed("vid", "dst"), dst_col)
         .select("src", "dst")
     )
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def iteration_plan(spark):
-    """Planning profile for driver-controlled iteration loops (PR/CC/LPA/
-    MS-BFS): AQE OFF for the loop body, restored on exit.
-
-    The per-iteration plan is static and repetitive; AQE's value is runtime
-    re-planning of unknown shapes, and its cost is an extra driver round of
-    stage materialization per query — measured ~1-2s per iteration, which
-    dominates wall-time once the compute per iteration drops below a few
-    seconds per core (and at sandbox bench scale becomes THE floor that
-    caps scaling efficiency).  Skew inside the loop is handled explicitly
-    (byte-gated broadcast in LinkGraph.expand, salted hub buckets via
-    enable_salting), so the AQE skew-join backstop is not load-bearing
-    here.  Derivation / ad-hoc queries keep AQE on (session default).
-
-    Also prefers shuffled-hash over sort-merge joins inside the loop: the
-    frontier/state side is a bounded hash map (at most |V| rows), and SHJ
-    streams the co-partitioned edge side without the per-iteration sort
-    SMJ would insert.
-
-    Constraint propagation is OFF in the loop: Catalyst's
-    ``getAllValidConstraints`` substitutes every Project alias into every
-    inherited constraint, and for wide multi-lane state Projects (k sketch
-    limbs each aliased from an expression over the SAME join output, plus
-    a sum column referencing all k of them — the anf/hyperball shape) the
-    alias-combination set grows combinatorially in k.  Measured on a
-    120-vertex fixture: planning ONE hyperball round at k=16 took 8.7s,
-    k=24 OOMed an 8 GiB driver heap inside ExpressionSet.map; with the
-    flag off, the full k=64 × 10-round job runs in 28s end to end.  The
-    constraints only add redundant inferred IsNotNull/filter predicates on
-    hand-shaped plans, so nothing is lost inside the loop; ad-hoc queries
-    keep the session default.
-    """
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    old_smj = conf.get("spark.sql.join.preferSortMergeJoin", "true")
-    old_cp = conf.get("spark.sql.constraintPropagation.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.join.preferSortMergeJoin", old_smj)
-        conf.set("spark.sql.constraintPropagation.enabled", old_cp)
 
 
 class LinkGraph:
@@ -543,14 +476,9 @@ class LinkGraph:
         semi-join).  The salted path is bypassed for overrides (the filter
         only fires on late dense levels where the frontier is small).
         """
-        spark = self.spark
         e = edges if edges is not None else self.edges
-        if est_rows is not None:
-            thresh = broadcast_threshold(spark)
-            ncols = len(msgs.columns)
-            est_bytes = est_rows * (16 + 12 * ncols)
-            if 0 < thresh and est_bytes < thresh:
-                return e.join(F.broadcast(msgs), "src")
+        if est_rows is not None and broadcast_fits(self.spark, est_rows, len(msgs.columns)):
+            return e.join(F.broadcast(msgs), "src")
         if edges is None:
             if self._salted is None:
                 self.maybe_auto_salt()

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import iteration_plan
+from linkgraph.loop import iteration_plan
 
 
 def temporal_contact_edges(

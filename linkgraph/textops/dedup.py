@@ -276,9 +276,9 @@ def near_duplicate_clusters(
     components are dense, so 2-3 rounds in practice) → one anti-join for
     singletons + one |docs|-row count aggregate for cluster sizes.
 
-    Every intermediate cache is released before returning: the result is
-    count()-materialized (localCheckpoint-backed via the CC kernel), so
-    nothing recomputes through the dropped blocks."""
+    The pair and graph caches are released before returning: the result
+    is persisted and count()-materialized, so nothing recomputes through
+    the dropped blocks."""
     from linkgraph.algos.components import connected_components
     from linkgraph.graph import LinkGraph
 
@@ -297,10 +297,6 @@ def near_duplicate_clusters(
     out.count()
     pairs.unpersist()
     g.unpersist()
-    try:
-        comp.unpersist()  # release the CC result's localCheckpoint blocks
-    except Exception:
-        pass
     return out
 
 

@@ -187,6 +187,33 @@ def test_fused_iteration_lineage_bounded(er):
     assert plan.count("Join") == 0 and len(plan) < 4000
 
 
+def test_round_loops_release_their_checkpoints(er):
+    """Each round's localCheckpoint is released once the next one is
+    materialized (DataFrame.unpersist() does not free a checkpoint): a
+    kernel call leaves at most the returned frame's own checkpoint
+    registered."""
+    from linkgraph.algos.components import connected_components
+    from linkgraph.algos.kcore import coreness
+    from linkgraph.algos.labelprop import label_propagation
+    from linkgraph.algos.louvain import louvain_local_move
+    from linkgraph.algos.pagerank import pagerank
+
+    jsc = er.spark.sparkContext._jsc
+    er.degrees().count()  # graph-level caches are not the kernels' to free
+    er.vertices().count()
+    kernels = {
+        "pagerank": lambda: pagerank(er, max_iter=6),
+        "connected_components": lambda: connected_components(er),
+        "label_propagation": lambda: label_propagation(er),
+        "louvain_local_move": lambda: louvain_local_move(er, rounds=3),
+        "coreness": lambda: coreness(er),
+    }
+    for name, run in kernels.items():
+        before = jsc.sc().getPersistentRDDs().size()
+        run().collect()
+        assert jsc.sc().getPersistentRDDs().size() - before <= 1, name
+
+
 def test_personalized_pagerank_vs_numpy(spark):
     """PPR on a directed graph with a sink: teleport AND dangling mass
     return to the seed set; ranks sum to 1; matches numpy power iteration

@@ -99,26 +99,28 @@ def test_lineage_audit_detects_corruption(spark, tmp_path):
         mgr.read_state(mgr.latest())
 
 
-def test_lpa_resume_equals_uninterrupted(spark, grid, tmp_path):
-    """LPA checkpoint/resume parity (all iterative kernels are resumable):
-    interrupted-then-resumed equals uninterrupted bit-for-bit — LPA is
-    deterministic, so exact equality is the right assertion."""
+@pytest.mark.parametrize("kernel", ["label_propagation", "connected_components"])
+def test_resume_equals_uninterrupted(spark, grid, tmp_path, kernel):
+    """Checkpoint/resume parity of the deterministic label kernels:
+    interrupted-then-resumed equals uninterrupted bit-for-bit, so exact
+    equality is the right assertion."""
+    from linkgraph.algos.components import connected_components
     from linkgraph.algos.labelprop import label_propagation
 
-    full = {r["vid"]: r["label"] for r in label_propagation(grid, max_iter=8).collect()}
+    run = {"label_propagation": label_propagation,
+           "connected_components": connected_components}[kernel]
+    full = {tuple(r) for r in run(grid, max_iter=8).collect()}
 
-    root = str(tmp_path / "chklpa")
+    root = str(tmp_path / f"chk_{kernel}")
     mgr = CheckpointManager(spark, root)
-    label_propagation(grid, max_iter=4, checkpoint_mgr=mgr, snapshot_every=2)
+    run(grid, max_iter=4, checkpoint_mgr=mgr, snapshot_every=2)
     snap = mgr.latest()
     assert snap is not None and snap["metrics"]["iteration"] in (2, 4)
     assert snap["lineage"] and all("rows" in p for p in snap["lineage"])
 
     resumed = {
-        r["vid"]: r["label"]
-        for r in label_propagation(
-            grid, max_iter=8, checkpoint_mgr=mgr, resume=True
-        ).collect()
+        tuple(r)
+        for r in run(grid, max_iter=8, checkpoint_mgr=mgr, resume=True).collect()
     }
     assert resumed == full
 

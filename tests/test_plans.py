@@ -546,3 +546,39 @@ def test_heaps_fit_two_phase_matches_global_window(spark):
         ).alias("heaps_beta"),
     )
     assert out.collect() == ref.collect()
+
+
+@pytest.mark.parametrize(
+    "kernel, jobs_per_round",
+    # measured before the kernels moved onto linkgraph.loop.iterate: one
+    # fused round job plus one broadcast-build job per byte-gated broadcast
+    [("pagerank", 2), ("connected_components", 3), ("label_propagation", 2)],
+)
+def test_round_jobs_per_round_pinned(spark, kernel, jobs_per_round):
+    """The round driver adds no Spark job to a round: jobs(k+1) - jobs(k)
+    stays at the value each hand-written loop had."""
+    from linkgraph.algos.components import connected_components
+    from linkgraph.algos.labelprop import label_propagation
+    from linkgraph.algos.pagerank import pagerank
+    from linkgraph.fixtures import er_edges
+
+    g = LinkGraph.from_undirected(edges_df(spark, er_edges(150, 0.03)), num_partitions=8)
+    run = {
+        "pagerank": lambda k: pagerank(g, tol=0.0, max_iter=k),
+        "connected_components": lambda k: connected_components(g, max_iter=k),
+        "label_propagation": lambda k: label_propagation(g, max_iter=k),
+    }[kernel]
+    g.num_vertices()  # build the cached degree table before counting jobs
+    sc = spark.sparkContext
+
+    def jobs(k: int) -> int:
+        group = f"jobs-per-round-{kernel}-{k}"
+        sc.setJobGroup(group, group)
+        try:
+            run(k).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(2) - jobs(1) == jobs_per_round
+    g.unpersist()
